@@ -5,7 +5,8 @@ of a pandas row function in the reference implementation:
 
   - phase_expr        <- get_phase            (reference variant_annotations.py:24-31)
   - alleles_expr /
-    allele_expr       <- vector_GT_alleles    (reference variant_annotations.py:21-60)
+    allele_expr /
+    with_gt_alleles   <- vector_GT_alleles    (reference variant_annotations.py:21-60)
   - zygosity_expr     <- zygosity_fast        (reference variant_annotations.py:64-127)
   - vartype_expr      <- vartype_map          (reference variant_annotations.py:130-162)
   - multiallele_expr  <- ALT.str.count(',')   (reference variant_annotations.py:504)
@@ -28,7 +29,7 @@ Documented semantic notes (see SURVEY.md §8.2):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: The canonical variant-site key (reference pandasvcf.py:178-179).
@@ -97,6 +98,31 @@ def gt_index_expr(gt_part: Column) -> Column:
     """Genotype index as nullable int ('.' and haploid-missing -> NULL)."""
     return F.when(gt_part == ".", F.lit(None).cast("int")).otherwise(
         gt_part.try_cast("int")
+    )
+
+
+def with_gt_alleles(df: DataFrame) -> DataFrame:
+    """Parse the GT column against REF/ALT: adds GT1/GT2 (nullable int
+    allele indices) and a1/a2 (resolved allele strings, '.' when missing or
+    unresolvable), plus the intermediate _gtp/_gt1_raw/_gt2_raw columns —
+    callers select what they keep.
+
+    The stages stay separate projections on purpose: Catalyst's
+    CollapseProject will not inline a non-cheap expression (the split)
+    into a parent that references it more than once, so the split runs
+    once per row. Writing the parts inline would recompute it per use."""
+    alleles = alleles_expr("REF", "ALT")
+    return (
+        df.withColumn("_gtp", gt_parts_expr("GT"))
+        .withColumn("_gt1_raw", F.col("_gtp").getItem(0))
+        .withColumn(
+            "_gt2_raw",
+            F.when(F.size("_gtp") > 1, F.try_element_at("_gtp", F.lit(2))),
+        )
+        .withColumn("GT1", gt_index_expr(F.col("_gt1_raw")))
+        .withColumn("GT2", gt_index_expr(F.col("_gt2_raw")))
+        .withColumn("a1", allele_expr(alleles, F.col("_gt1_raw")))
+        .withColumn("a2", allele_expr(alleles, F.col("_gt2_raw")))
     )
 
 

@@ -12,8 +12,9 @@ same semantics are ONE lazy narrow plan:
 
     filter(ALT!='.')                                    (P5)
     per-row hom-ref count over the sample map           (A1, zero shuffle)
+    map_filter missing calls out of the sample map      (P6)
     explode(samples)                                    (R1)
-    filter missing calls / GTs                          (P6, P7)
+    filter missing GTs                                  (P7)
     native column expressions for every annotation      (F2-F8)
     optional filter(zygosity != 'hom-ref')              (P8)
 
@@ -36,15 +37,12 @@ from pyspark.sql import functions as F
 from pandasvcf_spark.functions.genomics import (
     MISSING_GT,
     SITE_KEY,
-    allele_expr,
-    alleles_expr,
     format_map_expr,
-    gt_index_expr,
-    gt_parts_expr,
     hom_ref_call_indicator,
     multiallele_expr,
     phase_expr,
     vartype_expr,
+    with_gt_alleles,
     zygosity_expr,
 )
 
@@ -67,110 +65,86 @@ ANNOTATION_COLS = [
 
 
 def explode_genotypes(
-    wide: DataFrame,
-    drop_missing_alt: bool = True,
-    drop_missing_calls: bool = True,
-    precompute_hom_ref: bool = True,
-    drop_hom_ref_calls: bool = False,
+    wide: DataFrame, drop_hom_ref_calls: bool = False
 ) -> DataFrame:
-    """Wide (one row per site, samples MAP) -> long (one row per call).
+    """Wide (one row per site, samples MAP) -> long (one row per called
+    sample), with the per-site `hom_ref_counts` folded over the sample map
+    *before* the explode — a per-row expression, so the count costs no
+    shuffle. Sites with ALT='.' (reference P5) and missing calls ('.' or
+    NULL, reference P6; NULL guards ragged lines) are dropped.
 
-    precompute_hom_ref: fold the per-site hom-ref count over the sample map
-    *before* exploding — a per-row expression, so the count costs no shuffle.
-    Assumes one wide row per site key (standard VCF); pass False and let
-    `annotate_genotypes` compute it with a window when site keys repeat.
+    One indicator pass serves both modes: `nonref` keeps the calls that
+    are neither missing nor hom-ref, and the hom-ref count is derived
+    arithmetically — hom_ref = |samples| - |nonref| - |missing| (the three
+    classes partition the map). The missing-count fold is a cheap null/'.'
+    test per entry, so the expensive allele-resolving
+    `hom_ref_call_indicator` runs once per call (measured ~3 s per pass on
+    1000G's 24.4M calls). It reads the genotype as the call's first
+    ':'-field (GT first — guaranteed by the VCF spec when GT is present).
 
-    drop_hom_ref_calls: filter hom-ref calls out of the sample map BEFORE
-    the explode (map_filter with the same `hom_ref_call_indicator` the
-    counts use, so counts and filter can never disagree). In a population
-    panel ~97% of calls are hom-ref, so this shrinks the Generate's output
-    ~30x — the explode copies the wide columns once per emitted row, which
-    is the dominant cost of the whole pipeline (measured on 1000G/24.4M
-    calls: explode 15-19 s full vs ~2 s filtered). Only set together with a
-    downstream `drop_hom_ref` annotation pass (annotate_vcf wires this);
-    the zygosity filter there then just confirms the survivors. Like the
-    precompute, it reads the genotype as the call's first ':'-field (GT
-    first — guaranteed by the VCF spec when GT is present).
+    drop_hom_ref_calls: explode `nonref` instead of every called sample.
+    In a population panel ~97% of calls are hom-ref, so this shrinks the
+    Generate's output ~30x — the explode copies the wide columns once per
+    emitted row, which is the dominant cost of the whole pipeline
+    (measured on 1000G/24.4M calls: explode 15-19 s full vs ~2 s
+    filtered). Only set together with a downstream `drop_hom_ref`
+    annotation pass (annotate_vcf wires this); the zygosity filter there
+    then just confirms the survivors.
+
+    The count assumes one wide row per site key (standard VCF). When site
+    keys repeat, call `explode_genotypes(wide).drop('hom_ref_counts')` and
+    let `annotate_genotypes` count per site with a window instead — in the
+    default mode, since the window can only count hom-ref calls that
+    reach it.
     """
-    df = wide
-    if drop_missing_alt:
-        df = df.filter(F.col("ALT") != ".")  # reference P5
+    df = wide.filter(F.col("ALT") != ".")  # reference P5
 
     def _is_missing(v):
         return v.isNull() | (v == ".")
 
-    def _not_hom_ref(v):
-        return (
-            hom_ref_call_indicator(v, F.col("REF"), F.col("ALT")) == 0
-        )
-
-    if precompute_hom_ref and drop_hom_ref_calls and drop_missing_calls:
-        # Fused single-indicator-pass form: the kept map drops missing AND
-        # hom-ref calls in ONE map_filter, and the hom-ref count is derived
-        # arithmetically — hom_ref = |samples| - |kept| - |missing| (the
-        # three classes partition the map: `missing` is indicator-0 and
-        # dropped; `kept` is indicator-0 and not missing; the remainder is
-        # exactly the indicator-1 calls). The missing-count fold is a cheap
-        # null/'.' test per entry, so the expensive allele-resolving
-        # indicator runs once per call instead of twice (measured ~3 s/pass
-        # on 1000G's 24.4M calls).
-        missing_n = F.aggregate(
-            F.map_values("samples"),
-            F.lit(0),
-            lambda acc, v: acc + F.when(_is_missing(v), 1).otherwise(0),
-        )
-        kept = F.map_filter(
-            "samples", lambda _k, v: ~_is_missing(v) & _not_hom_ref(v)
-        )
-        df = df.select(
-            "*",
-            kept.alias("__kept"),
-            missing_n.alias("__missing_n"),
-        ).select(
-            *[c for c in df.columns if c != "samples"],
-            (F.size("samples") - F.size("__kept") - F.col("__missing_n"))
-            .cast("int")
-            .alias("hom_ref_counts"),
-            F.col("__kept").alias("samples"),
-        )
-    else:
-        if precompute_hom_ref:
-            df = df.withColumn(
-                "hom_ref_counts",
-                F.aggregate(
-                    F.map_values("samples"),
-                    F.lit(0),
-                    lambda acc, call: acc
-                    + hom_ref_call_indicator(call, F.col("REF"), F.col("ALT")),
-                ).cast("int"),
-            )
-        if drop_hom_ref_calls:
-            # Evaluated AFTER the count fold (which reads the original map) —
-            # the chained withColumn collapses into one projection, original
-            # map feeding both, so the counts still cover every sample.
-            df = df.withColumn(
-                "samples",
-                F.map_filter("samples", lambda _k, v: _not_hom_ref(v)),
-            )
+    missing_n = F.aggregate(
+        F.map_values("samples"),
+        F.lit(0),
+        lambda acc, v: acc + F.when(_is_missing(v), 1).otherwise(0),
+    )
+    nonref = F.map_filter(
+        "samples",
+        lambda _k, v: ~_is_missing(v)
+        & (hom_ref_call_indicator(v, F.col("REF"), F.col("ALT")) == 0),
+    )
+    called = (
+        F.col("__nonref")
+        if drop_hom_ref_calls
+        else F.map_filter("samples", lambda _k, v: ~_is_missing(v))
+    )
+    df = df.select(
+        "*",
+        nonref.alias("__nonref"),
+        missing_n.alias("__missing_n"),
+    ).select(
+        *[c for c in df.columns if c != "samples"],
+        (F.size("samples") - F.size("__nonref") - F.col("__missing_n"))
+        .cast("int")
+        .alias("hom_ref_counts"),
+        called.alias("samples"),
+    )
     keep = [c for c in df.columns if c != "samples"]
-    df = df.select(*keep, F.explode("samples").alias("sample_ids", "call"))
-    if drop_missing_calls:
-        # reference P6: '.' calls -> NaN so stack() drops them; NULL guards
-        # ragged lines.
-        df = df.filter(F.col("call").isNotNull() & (F.col("call") != "."))
-    return df
+    return df.select(*keep, F.explode("samples").alias("sample_ids", "call"))
 
 
 def annotate_genotypes(
     long_df: DataFrame,
     drop_hom_ref: bool = True,
-    drop_missing_gt: bool = True,
     split_columns: dict[str, int] | None = None,
     format_fields: list[str] | str | None = None,
-    keep_fields_map: bool = False,
 ) -> DataFrame:
     """Annotate a long genotype table (needs SITE_KEY + FORMAT + sample_ids +
-    call columns; hom_ref_counts used if present, else computed by window).
+    call columns). Calls with a missing GT are dropped (reference P7).
+
+    hom_ref_counts is used if present, else computed per site key with a
+    window — one shuffle. That window is the route for inputs whose site
+    keys repeat across wide rows: drop `explode_genotypes`' per-row count
+    (`.drop('hom_ref_counts')`) before annotating.
 
     format_fields: non-GT FORMAT sub-fields to materialize as columns.
         None/[] (default) = skip — plan construction stays lazy (zero Spark
@@ -198,27 +172,9 @@ def annotate_genotypes(
             F.col("call"),
         ).otherwise(F.try_element_at("fields", F.lit("GT"))),
     )
-    if drop_missing_gt:
-        # reference P7 (variant_annotations.py:614-622)
-        df = df.filter(
-            F.col("GT").isNotNull() & ~F.col("GT").isin(*MISSING_GT)
-        )
-
-    gt = gt_parts_expr("GT")
-    alleles = alleles_expr("REF", "ALT")
-    df = (
-        df.withColumn("phase", phase_expr("GT"))
-        .withColumn("_gtp", gt)
-        .withColumn("_gt1_raw", F.col("_gtp").getItem(0))
-        .withColumn(
-            "_gt2_raw",
-            F.when(F.size("_gtp") > 1, F.try_element_at("_gtp", F.lit(2))),
-        )
-        .withColumn("GT1", gt_index_expr(F.col("_gt1_raw")))
-        .withColumn("GT2", gt_index_expr(F.col("_gt2_raw")))
-        .withColumn("a1", allele_expr(alleles, F.col("_gt1_raw")))
-        .withColumn("a2", allele_expr(alleles, F.col("_gt2_raw")))
-    )
+    # reference P7 (variant_annotations.py:614-622)
+    df = df.filter(F.col("GT").isNotNull() & ~F.col("GT").isin(*MISSING_GT))
+    df = with_gt_alleles(df.withColumn("phase", phase_expr("GT")))
     df = (
         df.withColumn("multiallele", multiallele_expr("ALT"))
         .withColumn("zygosity", zygosity_expr(F.col("a1"), F.col("a2"), "REF"))
@@ -227,10 +183,10 @@ def annotate_genotypes(
     )
 
     if "hom_ref_counts" not in df.columns:
-        # Fallback for pre-long data: window aggregate — one shuffle on the
-        # site key (bounded per-key row count = n_samples, so no skew blowup).
-        # The wide path precomputes this per-row instead (reference A1/J3
-        # as a window, SURVEY §2.5).
+        # Window aggregate — one shuffle on the site key (bounded per-key
+        # row count = n_samples x repeats, so no skew blowup). The wide path
+        # precomputes this per-row instead (reference A1/J3 as a window,
+        # SURVEY §2.5).
         site_w = Window.partitionBy(*SITE_KEY)
         df = df.withColumn(
             "hom_ref_counts",
@@ -276,7 +232,6 @@ def annotate_genotypes(
         *ANNOTATION_COLS,
         *passthrough,
         *field_cols,
-        *(["fields"] if keep_fields_map else []),
     )
     return out
 
@@ -299,7 +254,7 @@ def annotate_vcf(
     hom_ref_counts are precomputed per WIDE row (zero-shuffle path), which
     assumes site keys (CHROM,POS,REF,ALT) are unique across lines — standard
     for real VCFs. If your input legally repeats a site key, build the
-    pipeline as explode_genotypes(precompute_hom_ref=False) |>
+    pipeline as read_vcf |> explode_genotypes |> .drop('hom_ref_counts') |>
     annotate_genotypes, which aggregates per site with a window instead.
 
     ordered: add the canonical deterministic sort (CHROM, POS, REF, ALT,

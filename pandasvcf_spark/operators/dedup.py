@@ -357,28 +357,6 @@ def minhash_signature_expr(shingles: Column, num_hashes: int = 64) -> Column:
     )
 
 
-def lsh_band_keys_expr(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """ARRAY<STRUCT<band INT, key BIGINT>>: hash each band (contiguous slice
-    of `rows_per_band` signature elements) to one 64-bit bucket key. Two
-    documents sharing any band key are near-dup candidates."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.xxhash64(
-                F.array_join(
-                    F.transform(
-                        F.slice(signature, b * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
-                    ",",
-                ),
-                b,
-            ).alias("key"),
-        ),
-    )
-
-
 def _bands_df(
     df: DataFrame,
     id_col: str,

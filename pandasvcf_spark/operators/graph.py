@@ -537,7 +537,10 @@ def link_prediction(
     # Measured (round 16, min-of-3 noop): scored agg 4.73 s -> 2.34 s;
     # exchange-only floor 2.09 s. No partition count pinned: the
     # exchange uses spark.sql.shuffle.partitions and stays
-    # AQE-coalescible (guide §1.2 per-task work, §2.3).
+    # AQE-coalescible (guide §1.2 per-task work, §2.3). Caveat: on a dense
+    # graph with few map partitions relative to a pair's witness count,
+    # witnesses do co-locate map-side, so skipping the partial pass ships
+    # more rows than the planner's partial-agg plan would.
     scored = wedges.repartition("u", "v").groupBy("u", "v").agg(
         F.count(F.lit(1)).cast("long").alias("cn"),
         F.round(F.sum("__w_aa"), 6).alias("aa"),

@@ -356,14 +356,6 @@ def _avg2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return (((a ^ b) & np.uint32(0xFEFEFEFE)) >> np.uint32(1)) + (a & b)
 
 
-def _channels(p: int) -> tuple[int, int, int, int]:
-    return (p >> 24) & 0xFF, (p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF
-
-
-def _pack(a: int, r: int, g: int, b: int) -> int:
-    return (a << 24) | (r << 16) | (g << 8) | b
-
-
 def _clamp(v: int) -> int:
     return 0 if v < 0 else (255 if v > 255 else v)
 

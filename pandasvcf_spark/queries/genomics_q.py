@@ -26,8 +26,6 @@ from pyspark.sql import functions as F
 
 from pandasvcf_spark.functions.genomics import (
     MISSING_GT,
-    allele_expr,
-    alleles_expr,
     format_map_expr,
     gt_index_expr,
     gt_parts_expr,
@@ -35,6 +33,7 @@ from pandasvcf_spark.functions.genomics import (
     phase_expr,
     strip_chr,
     vartype_expr,
+    with_gt_alleles,
     zygosity_expr,
 )
 from pandasvcf_spark.operators.relational import dedup_annotate_join
@@ -149,23 +148,11 @@ def _gt_parsed(spark, sf_dir):
     """GT-parse layer shared by the F-series queries. The parsed a1/a2 are
     bounded expressions over the barrier-protected GT attribute, so
     downstream zygosity references stay small."""
-    df = derived_genotypes(spark, sf_dir)
-    gtp = gt_parts_expr("GT")
-    alleles = alleles_expr("REF", "ALT")
-    df = (
-        df.withColumn("phase", phase_expr("GT"))
-        .withColumn("_g1", gtp.getItem(0))
-        .withColumn("_g2", F.when(F.size(gtp) > 1, F.try_element_at(gtp, F.lit(2))))
+    df = with_gt_alleles(
+        derived_genotypes(spark, sf_dir).withColumn("phase", phase_expr("GT"))
     )
     return df.select(
-        "l_orderkey",
-        "l_linenumber",
-        "GT",
-        "phase",
-        gt_index_expr(F.col("_g1")).alias("GT1"),
-        gt_index_expr(F.col("_g2")).alias("GT2"),
-        allele_expr(alleles, F.col("_g1")).alias("a1"),
-        allele_expr(alleles, F.col("_g2")).alias("a2"),
+        "l_orderkey", "l_linenumber", "GT", "phase", "GT1", "GT2", "a1", "a2"
     )
 
 
@@ -583,14 +570,8 @@ def flagship_annotate(spark, sf_dir):
     annotate (phase/alleles/zygosity/vartype) → histogram. Mirrors the VCF
     E3 pipeline (SURVEY §3) end-to-end with every F-series expression."""
     df = derived_genotypes(spark, sf_dir)
-    df = df.filter(F.col("GT").isNotNull() & ~F.col("GT").isin(*MISSING_GT))
-    gtp = gt_parts_expr("GT")
-    alleles = alleles_expr("REF", "ALT")
-    df = (
-        df.withColumn("_g1", gtp.getItem(0))
-        .withColumn("_g2", F.when(F.size(gtp) > 1, F.try_element_at(gtp, F.lit(2))))
-        .withColumn("a1", allele_expr(alleles, F.col("_g1")))
-        .withColumn("a2", allele_expr(alleles, F.col("_g2")))
+    df = with_gt_alleles(
+        df.filter(F.col("GT").isNotNull() & ~F.col("GT").isin(*MISSING_GT))
     )
     return (
         df.select(

@@ -564,24 +564,6 @@ def imi_recall_at_10(
     return len(gt & got) / len(gt) if gt else 1.0
 
 
-def imi_opq_recall_at_10(
-    spark,
-    sf_dir: str,
-    n_queries: int = 200,
-    k: int = 10,
-    k_half: int = 16,
-    n_probe_cells: int = 48,
-    np_iters: int = 6,
-) -> float:
-    """Headline single-point wrapper over `imi_opq_probe_report` (one
-    fit + one ground truth, measured at the default probe budget)."""
-    rep = imi_opq_probe_report(
-        spark, sf_dir, n_queries=n_queries, k=k, k_half=k_half,
-        probe_curve=(n_probe_cells,), np_iters=np_iters,
-    )
-    return rep["curve"][n_probe_cells]
-
-
 def imi_opq_probe_report(
     spark,
     sf_dir: str,

@@ -20,13 +20,13 @@ pruning (reference P1 `usecols`) selects map entries at parse time so unused
 samples never leave the scan.
 
 Scale notes:
-  * A .gz VCF is one non-splittable input split; `read_vcf(repartition=...)`
-    (default: on for compressed inputs) redistributes raw lines before the
-    parse so the expensive split/typed-parse work is cluster-wide. For
-    repeated queries at 100 TB, `vcf_to_parquet` converts once to a
-    splittable columnar layout partitioned by CHROM; everything downstream
-    then gets splittable scans, column pruning, predicate pushdown and
-    partition pruning for free.
+  * A .gz VCF is one non-splittable input split; `read_vcf` spreads its raw
+    lines across the cluster before the parse (when the file count alone
+    gives fewer splits than cores) so the expensive split/typed-parse work
+    is cluster-wide. For repeated queries at 100 TB, `vcf_to_parquet`
+    converts once to a splittable columnar layout partitioned by CHROM;
+    everything downstream then gets splittable scans, column pruning,
+    predicate pushdown and partition pruning for free.
 """
 
 from __future__ import annotations
@@ -192,7 +192,6 @@ def read_vcf(
     samples: str | list[str] = "all",
     cols: list[str] | None = None,
     dedup: bool = False,
-    repartition: int | str | None = "auto",
     bgzf: bool | str = "auto",
     region: str | None = None,
 ) -> DataFrame:
@@ -223,9 +222,6 @@ def read_vcf(
         scale it is a full shuffle of the raw text before parsing, and real
         VCFs are duplicate-free; turn it on for untrusted concatenated
         inputs.
-    repartition: 'auto' spreads non-splittable compressed input across the
-        cluster before parsing when the file count alone can't (fewer
-        shards than cores); int forces a count; None leaves splits as-is.
     bgzf: 'auto' (default) scans a single htslib-blocked .gz through the
         splittable BGZF source (sources/bgzf.py) — chunk-parallel
         decompression with NO pre-parse shuffle, the single-file scale
@@ -372,24 +368,20 @@ def read_vcf(
     # header block is dropped here too).
     body = lines.filter(~F.col("value").startswith("#"))
     spread = spread_source
-    if repartition == "auto":
-        # A .gz file is ONE split; spread raw lines across the cluster so
-        # the expensive split/typed-parse work is parallel. With many .gz
-        # shards the file count already provides the splits — only shuffle
-        # when it doesn't. (When dedup is also requested its shuffle does
-        # the spreading — skip the extra round trip of the raw text.)
-        parallelism = spark.sparkContext.defaultParallelism
-        if (
-            not use_bgzf
-            and not use_tabix
-            and any(f.endswith(".gz") for f in files)
-            and len(files) < parallelism
-            and not dedup
-        ):
-            body = _spread_lines(body, parallelism)
-            spread = True
-    elif repartition:
-        body = _spread_lines(body, int(repartition))
+    # A .gz file is ONE split; spread raw lines across the cluster so the
+    # expensive split/typed-parse work is parallel. With many .gz shards the
+    # file count already provides the splits — only shuffle when it doesn't.
+    # (When dedup is also requested its shuffle does the spreading — skip
+    # the extra round trip of the raw text.)
+    parallelism = spark.sparkContext.defaultParallelism
+    if (
+        not use_bgzf
+        and not use_tabix
+        and any(f.endswith(".gz") for f in files)
+        and len(files) < parallelism
+        and not dedup
+    ):
+        body = _spread_lines(body, parallelism)
         spread = True
 
     if dedup:

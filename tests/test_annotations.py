@@ -92,6 +92,37 @@ def test_row_identity_invariant(spark):
     assert per_site == {100: 2, 200: 2, 300: 1, 500: 2, 600: 2}
 
 
+def test_repeated_site_key_counts_per_site_by_window(spark, tmp_path):
+    """A site key on two lines: the per-row count would see each line alone
+    (1 and 2 hom-ref calls). Dropping it routes annotate_genotypes to the
+    per-site window, which counts all three."""
+    from pandasvcf_spark.operators.annotate import (
+        annotate_genotypes,
+        explode_genotypes,
+    )
+    from pandasvcf_spark.sources.vcf import read_vcf
+
+    path = tmp_path / "repeat.vcf"
+    path.write_text(
+        "##fileformat=VCFv4.1\n"
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2\n"
+        "1\t100\t.\tA\tG\t.\t.\t.\tGT\t0|0\t0|1\n"
+        "1\t100\t.\tA\tG\t.\t.\t.\tGT\t0/0\t0/0\n"
+        "1\t200\t.\tC\tT\t.\t.\t.\tGT\t0|0\t1|1\n"
+    )
+    long_df = explode_genotypes(read_vcf(spark, str(path)))
+    per_row = sorted(
+        (r["POS"], r["hom_ref_counts"]) for r in long_df.collect()
+    )
+    assert per_row == [(100, 1), (100, 1), (100, 2), (100, 2), (200, 1), (200, 1)]
+    ann = annotate_genotypes(long_df.drop("hom_ref_counts"), drop_hom_ref=False)
+    got = sorted((r["POS"], r["GT"], r["hom_ref_counts"]) for r in ann.collect())
+    assert got == [
+        (100, "0/0", 3), (100, "0/0", 3), (100, "0|0", 3), (100, "0|1", 3),
+        (200, "0|0", 1), (200, "1|1", 1),
+    ]
+
+
 def test_info_fields_extraction(spark):
     """Typed INFO parsing (str_to_map engine scope — the reference leaves
     INFO opaque, SURVEY.md:184-186)."""

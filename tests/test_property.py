@@ -14,15 +14,24 @@ BASES = st.text(alphabet="ACGT", min_size=1, max_size=4)
 
 @st.composite
 def vcf_site(draw):
+    """One site: REF, ALT and 1-4 sample calls. A call is a genotype, the
+    '.' missing sentinel, or NULL (a ragged line's absent column)."""
     ref = draw(BASES)
     n_alt = draw(st.integers(1, 3))
     alts = [draw(BASES) for _ in range(n_alt)]
     n_alleles = 1 + n_alt
     allele = st.one_of(st.just("."), st.integers(0, n_alleles - 1).map(str))
-    ploidy = draw(st.integers(1, 2))
-    sep = draw(st.sampled_from(["/", "|"]))
-    gt = sep.join(draw(allele) for _ in range(ploidy))
-    return ref, ",".join(alts), gt
+
+    def genotype():
+        ploidy = draw(st.integers(1, 2))
+        sep = draw(st.sampled_from(["/", "|"]))
+        return sep.join(draw(allele) for _ in range(ploidy))
+
+    kinds = draw(
+        st.lists(st.sampled_from(["gt", "gt", "gt", ".", None]), min_size=1, max_size=4)
+    )
+    calls = [genotype() if k == "gt" else k for k in kinds]
+    return ref, ",".join(alts), calls
 
 
 def model_annotations(ref, alt, gt):
@@ -68,31 +77,46 @@ def model_annotations(ref, alt, gt):
           suppress_health_check=[HealthCheck.too_slow])
 def test_annotations_match_model(spark, sites):
     rows = [
-        ("1", 100 + i, ref, alt, "GT", {"S1": gt})
-        for i, (ref, alt, gt) in enumerate(sites)
+        ("1", 100 + i, ref, alt, "GT",
+         {f"S{j}": call for j, call in enumerate(calls)})
+        for i, (ref, alt, calls) in enumerate(sites)
     ]
     wide = spark.createDataFrame(
         rows,
         "CHROM string, POS long, REF string, ALT string, FORMAT string,"
         " samples map<string,string>",
     )
-    ann = annotate_genotypes(
-        explode_genotypes(wide), drop_hom_ref=False, format_fields=None
-    )
-    got = {r["POS"]: r for r in ann.collect()}
-    for i, (ref, alt, gt) in enumerate(sites):
-        pos = 100 + i
-        expected = model_annotations(ref, alt, gt)
-        if expected is None:
-            assert pos not in got, f"missing GT {gt} should be dropped"
-            continue
-        r = got[pos]
-        assert (r["a1"], r["a2"], r["zygosity"], r["vartype1"], r["vartype2"]) == expected, (
-            f"REF={ref} ALT={alt} GT={gt}"
+    for drop in (False, True):
+        ann = annotate_genotypes(
+            explode_genotypes(wide, drop_hom_ref_calls=drop),
+            drop_hom_ref=drop,
+            format_fields=None,
         )
-        # invariants: a1 in alleles or '.', multiallele = comma count
-        assert r["a1"] in {"."} | set([ref] + alt.split(","))
-        assert r["multiallele"] == alt.count(",")
+        rows_out = ann.collect()
+        got = {(r["POS"], r["sample_ids"]): r for r in rows_out}
+        kept = 0
+        for i, (ref, alt, calls) in enumerate(sites):
+            pos = 100 + i
+            models = [
+                None if call is None else model_annotations(ref, alt, call)
+                for call in calls
+            ]
+            hom_ref = sum(1 for m in models if m and m[2] == "hom-ref")
+            for j, (call, expected) in enumerate(zip(calls, models)):
+                key = (pos, f"S{j}")
+                if expected is None or (drop and expected[2] == "hom-ref"):
+                    assert key not in got, f"call {call!r} should be dropped"
+                    continue
+                kept += 1
+                r = got[key]
+                assert (r["a1"], r["a2"], r["zygosity"], r["vartype1"], r["vartype2"]) == expected, (
+                    f"REF={ref} ALT={alt} GT={call}"
+                )
+                assert r["hom_ref_counts"] == hom_ref, f"calls={calls}"
+                # invariants: a1 in alleles or '.', multiallele = comma count
+                assert r["a1"] in {"."} | set([ref] + alt.split(","))
+                assert r["multiallele"] == alt.count(",")
+        assert len(rows_out) == kept  # one row per kept call, no duplicates
 
 
 def test_pivot_roundtrip(spark):
