@@ -1,4 +1,5 @@
-"""Key/value payload parsing: VCF INFO strings, JSON event props.
+"""Key/value payload parsing: VCF INFO strings, JSON event props, and
+map-key literals.
 
 The reference never parses INFO (SURVEY.md:184-186 — it stays an opaque
 string), which makes half the 1000G fixture unqueryable. Declared engine
@@ -15,6 +16,26 @@ from pyspark.sql import functions as F
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
+
+
+#: Joins and splits `str_array_lit`'s values; never part of a VCF sample id,
+#: since the ids come from the tab-split '#CHROM' line.
+_ARRAY_LIT_SEP = "\t"
+
+
+def str_array_lit(values: list[str]) -> Column:
+    """ARRAY<STRING> literal of `values` built in O(1) py4j calls: one
+    joined string literal, split on tab. `F.lit(list)` issues calls per
+    value and builds an N-child `array(...)` that every later select
+    re-analyzes. `split` of a literal is foldable, so the optimized plan
+    holds the same array literal either way. Raises ValueError if a value
+    contains a tab."""
+    if not values:
+        return F.array().cast("array<string>")
+    bad = [v for v in values if _ARRAY_LIT_SEP in v]
+    if bad:
+        raise ValueError(f"array literal values contain a tab: {bad[:3]!r}")
+    return F.split(F.lit(_ARRAY_LIT_SEP.join(values)), _ARRAY_LIT_SEP)
 
 
 def info_map_expr(info: Column | str) -> Column:

@@ -91,6 +91,14 @@ def explode_genotypes(
     annotation pass (annotate_vcf wires this); the zygosity filter there
     then just confirms the survivors.
 
+    The explode is `explode_outer` plus a `sample_ids IS NOT NULL` filter,
+    which emits exactly plain `explode`'s rows: the outer form adds a NULL
+    row only for an empty or NULL map, and map keys are never NULL. Spark
+    infers a `size(source) > 0` filter below a plain explode and
+    substitutes the `map_filter` source into it, so the (allele-resolving,
+    when dropping) source would run twice, once in that Filter and once in
+    the Project; from an outer Generate it infers nothing.
+
     The count assumes one wide row per site key (standard VCF). When site
     keys repeat, call `explode_genotypes(wide).drop('hom_ref_counts')` and
     let `annotate_genotypes` count per site with a window instead — in the
@@ -129,7 +137,9 @@ def explode_genotypes(
         called.alias("samples"),
     )
     keep = [c for c in df.columns if c != "samples"]
-    return df.select(*keep, F.explode("samples").alias("sample_ids", "call"))
+    return df.select(
+        *keep, F.explode_outer("samples").alias("sample_ids", "call")
+    ).filter(F.col("sample_ids").isNotNull())
 
 
 def annotate_genotypes(

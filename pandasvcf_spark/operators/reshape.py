@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandasvcf_spark.functions.genomics import SITE_KEY
+from pandasvcf_spark.functions.maps import str_array_lit
 
 
 def pivot_genotypes(
@@ -153,7 +154,7 @@ def merge_vcf_panels(
 
     def fill(samples: list[str]):
         return F.map_from_arrays(
-            F.array(*[F.lit(s) for s in samples]),
+            str_array_lit(samples),
             F.array_repeat(F.lit(missing), len(samples)),
         )
 

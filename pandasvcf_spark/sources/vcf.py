@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pandasvcf_spark.functions.genomics import FIXED_COLS, strip_chr
+from pandasvcf_spark.functions.maps import str_array_lit
 
 #: Columns the reference asserts present (pandasvcf.py:139) — minus '#'.
 MANDATORY_COLS = ["CHROM", "POS", "REF", "ALT", "FORMAT"]
@@ -348,9 +349,9 @@ def read_vcf(
         # through the splittable source and the line streams are unioned
         # (each shard independently chunk-parallel; an earlier revision
         # silently read only files[0]). Predicates cannot cross the Arrow
-        # source, but an inferred filter (size(samples)>0 from the
-        # downstream explode) would still sit as a separate FilterExec
-        # carrying the whole parse subtree right above it — the same
+        # source, but a downstream predicate on a parsed column (e.g.
+        # explode_genotypes' ALT != '.') would still sit as a separate
+        # FilterExec carrying the parse subtree right above it — the same
         # double-evaluation the barrier below prevents, so mark the plan
         # spread here too.
         from functools import reduce
@@ -403,18 +404,20 @@ def read_vcf(
             # many samples there are. Building this with N element_at calls
             # blows the generated-code size limits at panel scale (observed:
             # janino compile failure -> interpreted fallback at 209 samples),
-            # so the expression tree must stay O(1) in sample count. Null-pad
-            # first so ragged lines can't break map_from_arrays.
+            # so the expression tree must stay O(1) in sample count — and so
+            # must the py4j calls that build it, hence one literal for the
+            # keys (str_array_lit). Null-pad first so ragged lines can't
+            # break map_from_arrays.
             n = len(sample_ids)
             padded = F.concat(
                 parts, F.array_repeat(F.lit(None).cast("string"), 9 + n)
             )
-            keys = F.lit(sample_ids)
+            keys = str_array_lit(sample_ids)
             vals = F.slice(padded, 10, n)
         else:
             # Explicit subset (typically small): per-sample extraction keeps
             # unneeded columns out of the row entirely.
-            keys = F.array(*[F.lit(s) for s in sample_ids])
+            keys = str_array_lit(sample_ids)
             vals = F.array(
                 *[
                     F.try_element_at(parts, F.lit(header.columns.index(s) + 1))
@@ -446,12 +449,15 @@ def read_vcf(
     if spread:
         # Pushdown BARRIER: when the plan contains a pre-parse exchange
         # (repartition/dedup), downstream predicates must not be substituted
-        # through the parse projection to below it — an inferred filter like
-        # `size(samples) > 0` (from a later explode) or a user `ALT != '.'`
-        # carries the whole split/map-build subtree and would run on the
-        # pre-shuffle side: for a .gz input that is ONE task re-parsing every
-        # line (measured: the map-build-under-repartition filter turned a
-        # ~7 s flagship into minutes). explode(array(struct(row))) emits
+        # through the parse projection to below it. A predicate such as
+        # `ALT != '.'` (explode_genotypes' P5, or a user's) carries the split
+        # subtree, one on `samples` the whole map build, and either would run
+        # on the pre-shuffle side: for a .gz input that is ONE task
+        # re-parsing every line (measured: the map-build-under-repartition
+        # filter turned a ~7 s flagship into minutes). A plain explode of
+        # `samples` would also infer `size(samples) > 0`; explode_genotypes
+        # uses explode_outer, which infers nothing, but other Generates and
+        # user filters still need this. explode(array(struct(row))) emits
         # exactly one row and predicates cannot cross a Generate; the
         # inferred size(array(...)) > 0 on the barrier itself constant-folds
         # to true. Same trick, same reason as operators/dedup.py:186-192.

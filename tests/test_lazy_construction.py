@@ -99,6 +99,57 @@ def test_annotate_auto_discovery_is_opt_in(spark):
     assert row["DP"] == "7" and row["GT"] == "0/1"
 
 
+def test_read_vcf_py4j_calls_independent_of_sample_count(
+    spark, tmp_path, monkeypatch
+):
+    """read_vcf's plan construction is O(1) in sample count down to the
+    py4j layer: a 3,000-sample header issues exactly as many driver ->
+    JVM commands as a 10-sample one. (Per-sample `lit`s cost ~2 commands
+    per sample plus an N-child `array(...)` every later select
+    re-analyzes.) Object-release commands, sent by py4j's finalizer
+    thread on its own schedule, are not counted."""
+    from py4j import protocol
+
+    from pandasvcf_spark.sources.vcf import read_vcf
+
+    def write_vcf(n):
+        ids = [f"S{i:05d}" for i in range(n)]
+        path = tmp_path / f"n{n}.vcf"
+        path.write_text(
+            "##fileformat=VCFv4.1\n"
+            + "\t".join(
+                ["#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER",
+                 "INFO", "FORMAT", *ids]
+            )
+            + "\n"
+            + "\t".join(["1", "100", ".", "A", "G", ".", ".", ".", "GT",
+                         *(["0|1"] * n)])
+            + "\n"
+        )
+        return str(path)
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting_send(command, *args, **kwargs):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    paths = {n: write_vcf(n) for n in (10, 3000)}
+    counts = {}
+    for n, path in paths.items():
+        read_vcf(spark, path)  # warm: first-call imports / JVM class loads
+        sent.clear()
+        monkeypatch.setattr(client, "send_command", counting_send)
+        df = read_vcf(spark, path)
+        monkeypatch.setattr(client, "send_command", send)
+        counts[n] = len(sent)
+        assert df.select(F.size("samples")).first()[0] == n
+    assert counts[10] == counts[3000], counts
+
+
 def test_zorder_key_matches_python_model(spark):
     """Bit-interleave vs the obvious Python model; locality sanity: the
     key of (x, y) and (x+1, y) differ less on average than (x, y+big)."""

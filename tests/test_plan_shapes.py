@@ -74,6 +74,34 @@ def test_annotate_vcf_is_one_narrow_plan(spark):
         assert plan.count("Generate") == 1
 
 
+def test_annotate_vcf_evaluates_explode_source_once(spark):
+    """explode_genotypes' map_filter source runs in the Project feeding the
+    explode only: no Filter of the optimized plan may carry a copy of it
+    (a plain explode makes Spark infer `size(<source>) > 0` and push it
+    down). golden.vcf.gz takes vcf_panel's route — the pre-parse spread
+    shuffle and the pushdown barrier — in both hom-ref modes."""
+    import os
+
+    from conftest import DATA_DIR
+
+    from pandasvcf_spark.operators.annotate import annotate_vcf
+
+    golden = os.path.join(DATA_DIR, "golden.vcf.gz")
+    for drop in (False, True):
+        df = annotate_vcf(spark, golden, drop_hom_ref=drop)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        filters = [
+            ln for ln in plan.splitlines()
+            if ln.lstrip(" :+-").startswith("Filter ")
+        ]
+        assert filters, plan
+        assert not any("map_filter" in ln for ln in filters), plan
+        assert "map_filter" in plan  # the source is still there, once
+        physical = _plan(df)
+        assert "Window" not in physical
+        assert "Join" not in physical
+
+
 def test_take_token_budget_window_is_partitioned(spark):
     from pandasvcf_spark.operators.sampling import take_token_budget
 

@@ -81,14 +81,19 @@ def test_annotations_match_model(spark, sites):
          {f"S{j}": call for j, call in enumerate(calls)})
         for i, (ref, alt, calls) in enumerate(sites)
     ]
+    # sites with a NULL and an empty sample map emit no rows in either
+    # mode (explode_outer + a null-key filter == explode)
+    rows += [("1", 90, "A", "G", "GT", None), ("1", 91, "A", "G", "GT", {})]
     wide = spark.createDataFrame(
         rows,
         "CHROM string, POS long, REF string, ALT string, FORMAT string,"
         " samples map<string,string>",
     )
     for drop in (False, True):
+        long_df = explode_genotypes(wide, drop_hom_ref_calls=drop)
+        assert long_df.filter(long_df["POS"] < 100).count() == 0
         ann = annotate_genotypes(
-            explode_genotypes(wide, drop_hom_ref_calls=drop),
+            long_df,
             drop_hom_ref=drop,
             format_fields=None,
         )
