@@ -257,6 +257,10 @@ def hom_ref_call_indicator(call: Column, ref: Column, alt: Column) -> Column:
     of a post-explode window aggregate — removing the only shuffle from the
     annotation pipeline. NULL/missing calls count 0. Haploid calls count 0
     (reference parity: haploid is never hom-ref, SURVEY §8.2).
+
+    The genotype is the call's first ':'-field: the VCF spec puts GT first
+    when present, and `operators.annotate.annotate_genotypes` reads GT by
+    the same rule whenever FORMAT leads with GT.
     """
     # Fast path: GT index 0 resolves to REF by definition, so a literal
     # '0|0' / '0/0' call is hom-ref without any allele resolution. In a

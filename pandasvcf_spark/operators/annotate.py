@@ -167,19 +167,25 @@ def annotate_genotypes(
         with n <= 1 are skipped, extras truncated — reference parity.
     """
     df = long_df.withColumn("fields", format_map_expr("FORMAT", "call"))
-    # GT fast path: when FORMAT's FIRST field is GT and the call carries no
-    # sub-fields (':'), the call IS the genotype — skip the per-row map
-    # lookup. For a GT-only panel (e.g. 1000G: 24.4M calls) this removes the
-    # dominant per-call expression cost; mixed/ragged rows fall through to
-    # the map. FORMAT must actually name GT: a colon-free non-GT FORMAT
-    # (e.g. FORMAT='DP', call='12') is spec-legal and has NO genotype — the
-    # map lookup correctly yields NULL so the missing-GT filter drops it.
+    # GT is the call's first ':'-field whenever FORMAT leads with GT (the
+    # VCF spec puts GT first when present; `hom_ref_call_indicator` reads
+    # it the same way). That is exactly what the map holds for a leading
+    # GT key — `split(call, ':')[0]` — for ragged '.' calls, '', extra call
+    # sub-fields, FORMAT='GT:' and 'GT:GT' alike, and substring_index
+    # returns a colon-free call uncopied. The map is only the fallback for
+    # FORMATs that name GT later (or not at all: FORMAT='DP' has no
+    # genotype, the lookup yields NULL and the missing-GT filter drops the
+    # call). CASE evaluates that branch lazily, so a GT-first call builds
+    # the map only when a requested FORMAT column reads it; Spark pushes
+    # the P7 filter below the projection and would otherwise build it in
+    # both. An `array_position` lookup in place of the fallback map drops
+    # the last higher-order function, so the post-Generate chain fuses
+    # into one codegen stage — which measured slower on the GT-only panel.
     df = df.withColumn(
         "GT",
         F.when(
-            ((F.col("FORMAT") == "GT") | F.col("FORMAT").startswith("GT:"))
-            & ~F.col("call").contains(":"),
-            F.col("call"),
+            (F.col("FORMAT") == "GT") | F.col("FORMAT").startswith("GT:"),
+            F.substring_index("call", ":", 1),
         ).otherwise(F.try_element_at("fields", F.lit("GT"))),
     )
     # reference P7 (variant_annotations.py:614-622)

@@ -31,10 +31,10 @@ Scale notes:
     `target_chunk_bytes=None` auto-sizes to ~2 chunks/core with a 4 MiB
     floor so small files still fan out and big files stay at sane task
     counts (AQE coalesces downstream anyway).
-  * Decompression is zlib (C speed) inside Arrow-batched mapInPandas —
+  * Decompression is zlib (C speed) inside Arrow-batched mapInArrow —
     32 cores decompress ~32x faster than the one JVM task the non-split
     path gets. Python is the right side for this: the work is pure C calls
-    on opaque bytes, and predicates cannot be pushed below a mapInPandas
+    on opaque bytes, and predicates cannot be pushed below a mapInArrow
     (so no pushdown-below-exchange hazard — see sources/vcf.py barrier).
 """
 
@@ -220,9 +220,7 @@ def read_bgzf_lines(
     byte-equal to `spark.read.text` on the same file (trailing '\\r'
     stripped, final unterminated line kept) but with chunk-level instead of
     file-level parallelism."""
-    import pandas as pd
-
-    offsets = bgzf_block_offsets(path)  # noqa: F841 (used below)
+    offsets = bgzf_block_offsets(path)
     with open(path, "rb") as fh:
         fh.seek(0, 2)
         eof = fh.tell()
@@ -255,14 +253,6 @@ def read_bgzf_lines(
             for i in range(0, len(offsets), bpc)
         ]
 
-    meta = pd.DataFrame(
-        {
-            "start": [r[0] for r in ranges],
-            "end": [r[1] for r in ranges],
-            "first": [i == 0 for i in range(len(ranges))],
-        }
-    )
-
     def scan(batches):
         import zlib as _z
 
@@ -270,14 +260,15 @@ def read_bgzf_lines(
         import pyarrow.compute as pc
 
         for batch in batches:
-            cols = batch.to_pydict()
-            for start, end, first in zip(cols["start"], cols["end"], cols["first"]):
+            for rid in batch.column("id").to_pylist():
+                start, end = ranges[rid]
+                first = rid == 0
                 with open(path, "rb") as fh:
-                    fh.seek(int(start))
+                    fh.seek(start)
                     # A range is whole gzip members by construction; inflate
                     # them member-by-member (decompressobj exposes
                     # unused_data for the member boundary).
-                    comp = fh.read(int(end) - int(start))
+                    comp = fh.read(end - start)
                     parts = []
                     while comp:
                         d = _z.decompressobj(wbits=31)
@@ -298,7 +289,7 @@ def read_bgzf_lines(
                     # when our own text ends exactly at a newline, the line
                     # starting at the boundary is ours (the next task drops
                     # it unconditionally). Terminates naturally at EOF.
-                    fh.seek(int(end))
+                    fh.seek(end)
                     while True:
                         blk = _read_one_block(fh)
                         if blk is None:
@@ -331,8 +322,11 @@ def read_bgzf_lines(
                 )
                 yield pa.RecordBatch.from_arrays([lines], ["value"])
 
-    df = spark.createDataFrame(meta)
-    return df.repartition(len(ranges)).mapInArrow(scan, "value string")
+    # One range id per partition: each task looks its byte range up from
+    # the closure, so spreading the ranges needs no range table and no
+    # shuffle.
+    n = len(ranges)
+    return spark.range(0, n, 1, n).mapInArrow(scan, "value string")
 
 
 def read_bgzf_virtual_ranges(

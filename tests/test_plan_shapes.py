@@ -102,6 +102,51 @@ def test_annotate_vcf_evaluates_explode_source_once(spark):
         assert "Join" not in physical
 
 
+def test_annotate_genotypes_builds_format_map_only_when_asked(spark):
+    """GT is read as the call's first ':'-field when FORMAT leads with GT;
+    the FORMAT map is GT's fallback only, inside the CASE's ELSE branch,
+    so no GT-first call builds it for the P7 filter or the allele parse.
+    It is projected as a column only while a requested FORMAT field reads
+    it: with `sample_qc` on top those columns are pruned and no Project
+    carries the map."""
+    import os
+    import re
+
+    from conftest import DATA_DIR
+
+    from pandasvcf_spark.operators.annotate import (
+        annotate_genotypes,
+        explode_genotypes,
+        sample_qc,
+    )
+    from pandasvcf_spark.sources.vcf import read_vcf
+
+    wide = read_vcf(spark, os.path.join(DATA_DIR, "split_cols.vcf"))
+    ann = annotate_genotypes(
+        explode_genotypes(wide),
+        drop_hom_ref=False,
+        format_fields=["AD", "HQ"],
+        split_columns={"AD": 2, "HQ": 2},
+    )
+    fallback = re.compile(
+        r"THEN substring_index\(call#\d+, :, 1\) "
+        r"ELSE element_at\(map_from_entries\("
+    )
+    for df, projected in ((sample_qc(ann), 0), (ann, 1)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert len(re.findall(r"map_from_entries\(.* AS fields#", plan)) == (
+            projected
+        ), plan
+        assert plan.count("map_from_entries(") == (
+            len(fallback.findall(plan)) + projected
+        ), plan
+        filters = [
+            ln for ln in plan.splitlines()
+            if ln.lstrip(" :+-").startswith("Filter ")
+        ]
+        assert any(fallback.search(ln) for ln in filters), plan
+
+
 def test_take_token_budget_window_is_partitioned(spark):
     from pandasvcf_spark.operators.sampling import take_token_budget
 

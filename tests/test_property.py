@@ -207,6 +207,49 @@ def test_format_map_never_aborts(spark, fmt, call):
     assert m == expected
 
 
+GT_FORMATS = ["GT", "GT:DP", "GT:DP:GQ", "GT:GT", "GT:", "DP:GT", "DP", "GTX:DP"]
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(GT_FORMATS),
+            st.one_of(st.none(), st.text(alphabet="01.|/:23", max_size=8)),
+        ),
+        min_size=1,
+        max_size=30,
+    )
+)
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_gt_is_first_field_when_format_leads_with_gt(spark, pairs):
+    """annotate_genotypes reads GT as the call's first ':'-field when
+    FORMAT leads with GT, and from the FORMAT map otherwise. Both must keep
+    the rows, with the same GT, that a P7 filter on the map's 'GT' entry
+    keeps — for ragged, empty, NULL and extra-field calls, and FORMATs
+    that repeat GT, end in ':', name GT later, or only look like GT."""
+    from pyspark.sql import functions as F
+
+    from pandasvcf_spark.functions.genomics import MISSING_GT, format_map_expr
+
+    long_df = spark.createDataFrame(
+        [
+            ("1", 100, "A", "G", fmt, f"s{i}", call, 0)
+            for i, (fmt, call) in enumerate(pairs)
+        ],
+        "CHROM string, POS long, REF string, ALT string, FORMAT string, "
+        "sample_ids string, call string, hom_ref_counts int",
+    )
+    got = annotate_genotypes(long_df, drop_hom_ref=False).select(
+        "sample_ids", "GT"
+    )
+    gt = F.try_element_at(format_map_expr("FORMAT", "call"), F.lit("GT"))
+    want = long_df.select("sample_ids", gt.alias("GT")).filter(
+        F.col("GT").isNotNull() & ~F.col("GT").isin(*MISSING_GT)
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 @given(
     st.lists(  # left: (key, t, tag)
         st.tuples(st.integers(0, 2), st.integers(0, 50)),
