@@ -556,7 +556,6 @@ def main() -> None:
         from pandasvcf_spark.functions.text import word_ngrams_expr
         from pandasvcf_spark.operators.dedup import (
             minhash_band_keys,
-            minhash_shingle_sidecar,
             near_dedup_incremental,
         )
         from pandasvcf_spark.queries.tables import load
@@ -579,7 +578,6 @@ def main() -> None:
             .localCheckpoint()
         )
         idx_dir = tempfile.mkdtemp(prefix="pandasvcf_bench_lshidx_")
-        sc_dir = tempfile.mkdtemp(prefix="pandasvcf_bench_lshsc_")
         try:
             # min-of-N like the headline roster (round-12 verdict ask
             # #4: build_sec/rehash_sec were the only trending keys load
@@ -596,7 +594,7 @@ def main() -> None:
             build_s = min(build_times)
             idx = spark.read.parquet(idx_dir)
 
-            def _incr(base_keys, base_sh=None):
+            def _incr(base_keys):
                 t0 = time.time()
                 n = near_dedup_incremental(
                     base,
@@ -606,48 +604,23 @@ def main() -> None:
                     min_jaccard=0.9,
                     repartition_to=par,
                     base_band_keys=base_keys,
-                    base_shingles=base_sh,
                 ).count()
                 return time.time() - t0, n
 
-            # Round-16 additive twin: the shingle-set sidecar
-            # (minhash_shingle_sidecar) beside the band-key index —
-            # with both, Jaccard verification probes precomputed sets
-            # and the base's TEXT payloads are never read. One-time
-            # write beside the index build; same survivor assert.
-            sidecar_build_t0 = time.time()
-            minhash_shingle_sidecar(
-                base, "doc_id", word_ngrams_expr("text", 3)
-            ).write.mode("overwrite").parquet(sc_dir)
-            sidecar_build_s = time.time() - sidecar_build_t0
-            sc_df = spark.read.parquet(sc_dir)
-
             runs_i = [_incr(idx) for _ in range(headline_runs)]
-            runs_s = [_incr(idx, sc_df) for _ in range(headline_runs)]
             runs_r = [_incr(None) for _ in range(headline_runs)]
-            assert runs_i[0][1] == runs_r[0][1] == runs_s[0][1], (
-                runs_i, runs_r, runs_s,
-            )
+            assert runs_i[0][1] == runs_r[0][1], (runs_i, runs_r)
             indexed = min(t for t, _ in runs_i)
-            sidecar = min(t for t, _ in runs_s)
             rehash = min(t for t, _ in runs_r)
             result["incremental_index_build_sec"] = round(build_s, 3)
             result["incremental_indexed_sec"] = round(indexed, 3)
-            result["incremental_sidecar_sec"] = round(sidecar, 3)
-            result["incremental_sidecar_build_sec"] = round(
-                sidecar_build_s, 3
-            )
             result["incremental_rehash_sec"] = round(rehash, 3)
             print(
                 f"# incremental dedup at 30× base: indexed {indexed:.2f}s "
-                f"/ indexed+sidecar {sidecar:.2f}s "
                 f"vs re-hash {rehash:.2f}s min-of-{headline_runs} "
                 f"({runs_i[0][1]} survivors; one-time index build "
-                f"{build_s:.2f}s, sidecar build {sidecar_build_s:.2f}s) — "
-                "the stored index replaces the base's per-batch "
-                "tokenize+minhash pass with a 12-byte-row scan; the "
-                "sidecar additionally replaces the verify stage's base "
-                "TEXT scan with precomputed shingle sets",
+                f"{build_s:.2f}s) — the stored index replaces the base's "
+                "per-batch tokenize+minhash pass with a 12-byte-row scan",
                 file=sys.stderr,
             )
 
@@ -667,19 +640,14 @@ def main() -> None:
                 base90 = c if base90 is None else base90.unionByName(c)
             base90 = base90.repartition(par).localCheckpoint()
             idx90_dir = tempfile.mkdtemp(prefix="pandasvcf_bench_lsh90_")
-            sc90_dir = tempfile.mkdtemp(prefix="pandasvcf_bench_lshsc90_")
             try:
                 minhash_band_keys(
                     base90, "doc_id", word_ngrams_expr("text", 3),
                     repartition_to=par,
                 ).write.mode("overwrite").parquet(idx90_dir)
                 idx90 = spark.read.parquet(idx90_dir)
-                minhash_shingle_sidecar(
-                    base90, "doc_id", word_ngrams_expr("text", 3)
-                ).write.mode("overwrite").parquet(sc90_dir)
-                sc90 = spark.read.parquet(sc90_dir)
 
-                def _incr90(base_sh=None):
+                def _incr90():
                     t0 = time.time()
                     n = near_dedup_incremental(
                         base90,
@@ -689,33 +657,24 @@ def main() -> None:
                         min_jaccard=0.9,
                         repartition_to=par,
                         base_band_keys=idx90,
-                        base_shingles=base_sh,
                     ).count()
                     return time.time() - t0, n
 
                 runs_90 = [_incr90() for _ in range(headline_runs)]
-                runs_90s = [_incr90(sc90) for _ in range(headline_runs)]
-                assert runs_90[0][1] == runs_90s[0][1], (runs_90, runs_90s)
                 indexed90 = min(t for t, _ in runs_90)
-                sidecar90 = min(t for t, _ in runs_90s)
                 result["incremental_indexed_90x_sec"] = round(indexed90, 3)
-                result["incremental_sidecar_90x_sec"] = round(sidecar90, 3)
                 print(
                     f"# incremental dedup at 90× base: indexed "
-                    f"{indexed90:.2f}s / indexed+sidecar {sidecar90:.2f}s "
-                    f"min-of-{headline_runs} ({runs_90[0][1]} survivors) — "
-                    f"read beside the 30× keys ({indexed:.2f}s / "
-                    f"{sidecar:.2f}s): flat-in-base-size is the "
-                    "touched-bucket prune's and the sidecar's asymptotic "
-                    "claim",
+                    f"{indexed90:.2f}s min-of-{headline_runs} "
+                    f"({runs_90[0][1]} survivors) — read beside the 30× "
+                    f"key ({indexed:.2f}s): flat-in-base-size is the "
+                    "touched-bucket prune's asymptotic claim",
                     file=sys.stderr,
                 )
             finally:
                 shutil.rmtree(idx90_dir, ignore_errors=True)
-                shutil.rmtree(sc90_dir, ignore_errors=True)
         finally:
             shutil.rmtree(idx_dir, ignore_errors=True)
-            shutil.rmtree(sc_dir, ignore_errors=True)
 
     _release_persisted(spark)
     if os.environ.get("SPARK_GRAFT_BENCH_SEMINCR", "1") != "0":

@@ -145,6 +145,10 @@ def zygosity_expr(
     classify those calls as hemi-ref / hemi-alt / hemi-miss instead of
     folding them into the diploid missing branches. Default keeps exact
     reference behavior."""
+    if haploid_mode not in ("miss", "hemi"):
+        raise ValueError(
+            f"unknown haploid_mode {haploid_mode!r}: use 'miss' or 'hemi'"
+        )
     r = F.col(ref) if isinstance(ref, str) else ref
     miss1, miss2 = a1 == ".", a2 == "."
     base = (
@@ -156,15 +160,7 @@ def zygosity_expr(
         .otherwise(F.lit("het-ref"))
     )
     if haploid_mode == "miss" or haploid is None:
-        if haploid_mode not in ("miss", "hemi"):
-            raise ValueError(
-                f"unknown haploid_mode {haploid_mode!r}: use 'miss' or 'hemi'"
-            )
         return base
-    if haploid_mode != "hemi":
-        raise ValueError(
-            f"unknown haploid_mode {haploid_mode!r}: use 'miss' or 'hemi'"
-        )
     return (
         F.when(haploid & miss1, F.lit("hemi-miss"))
         .when(haploid & (a1 == r), F.lit("hemi-ref"))

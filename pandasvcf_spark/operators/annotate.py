@@ -514,31 +514,15 @@ def hwe_stats(
     )
 
 
-def mendel_check(
-    df: DataFrame,
-    site_cols: list[str],
-    sample_col: str,
-    child,
-    father,
-    mother,
-    a1_col: str = "a1",
-    a2_col: str = "a2",
-    missing: str = ".",
-) -> DataFrame:
-    """Mendelian-consistency screen for a trio over the long parsed
-    genotype table — the family-study QC (bcftools +mendelian / plink
-    --mendel family): a child genotype is consistent when one allele can
-    come from the father and the other from the mother (either
-    assignment). Output: site_cols + c1/c2 (child alleles) + status
-    STRING ∈ {'consistent', 'violation', 'incomplete'} — incomplete when
-    any trio member is absent at the site or carries a missing allele
-    (haploid calls included: no diploid transmission model applies).
-
-    Plan: one partial-aggregated groupBy pivots the trio's six alleles
-    onto the site row (max over ≤1 value per slot — deterministic), then
-    the verdict is a pure CASE over the six strings. One shuffle of
-    sites × 6 short strings regardless of cohort width; violation rate
-    per child is a groupBy away."""
+def _trio_pivot(
+    df, site_cols, sample_col, child, father, mother, a1_col, a2_col, missing
+):
+    """The trio's six alleles pivoted onto the site row as c1/c2,
+    __f1/__f2, __m1/__m2 (one partial-aggregated groupBy; max over ≤1
+    value per slot — deterministic), plus the two verdict predicates
+    over them: `complete` (every member present with both alleles called)
+    and `consistent` (one child allele from each parent, either
+    assignment). Returns (pivot, complete, consistent)."""
     s = F.col(sample_col)
     a1, a2 = F.col(a1_col), F.col(a2_col)
 
@@ -569,6 +553,38 @@ def mendel_check(
     from_f = lambda x: (x == f1) | (x == f2)
     from_m = lambda x: (x == m1) | (x == m2)
     consistent = (from_f(c1) & from_m(c2)) | (from_m(c1) & from_f(c2))
+    return piv, complete, consistent
+
+
+def mendel_check(
+    df: DataFrame,
+    site_cols: list[str],
+    sample_col: str,
+    child,
+    father,
+    mother,
+    a1_col: str = "a1",
+    a2_col: str = "a2",
+    missing: str = ".",
+) -> DataFrame:
+    """Mendelian-consistency screen for a trio over the long parsed
+    genotype table — the family-study QC (bcftools +mendelian / plink
+    --mendel family): a child genotype is consistent when one allele can
+    come from the father and the other from the mother (either
+    assignment). Output: site_cols + c1/c2 (child alleles) + status
+    STRING ∈ {'consistent', 'violation', 'incomplete'} — incomplete when
+    any trio member is absent at the site or carries a missing allele
+    (haploid calls included: no diploid transmission model applies).
+
+    Plan: one partial-aggregated groupBy pivots the trio's six alleles
+    onto the site row (max over ≤1 value per slot — deterministic), then
+    the verdict is a pure CASE over the six strings. One shuffle of
+    sites × 6 short strings regardless of cohort width; violation rate
+    per child is a groupBy away."""
+    piv, complete, consistent = _trio_pivot(
+        df, site_cols, sample_col, child, father, mother,
+        a1_col, a2_col, missing,
+    )
     status = (
         F.when(~complete, "incomplete")
         .when(consistent, "consistent")
@@ -615,49 +631,23 @@ def tdt_test(
     Plan: the mendel_check pivot groupBy (sites × 6 short strings of
     shuffle), the consistency CASE, dosage arithmetic per site, one
     1-row fold."""
-    s = F.col(sample_col)
-    a1, a2 = F.col(a1_col), F.col(a2_col)
-
-    def slot(member, a):
-        return F.max(F.when(s == F.lit(member), a))
-
-    piv = df.filter(
-        s.isin([child, father, mother])
-    ).groupBy(*site_cols).agg(
-        slot(child, a1).alias("__c1"),
-        slot(child, a2).alias("__c2"),
-        slot(father, a1).alias("__f1"),
-        slot(father, a2).alias("__f2"),
-        slot(mother, a1).alias("__m1"),
-        slot(mother, a2).alias("__m2"),
+    piv, complete, consistent = _trio_pivot(
+        df, site_cols, sample_col, child, father, mother,
+        a1_col, a2_col, missing,
     )
-
-    def called(x1, x2):
-        return (
-            x1.isNotNull() & x2.isNotNull()
-            & (x1 != missing) & (x2 != missing)
-        )
-
-    c1, c2 = F.col("__c1"), F.col("__c2")
-    f1, f2 = F.col("__f1"), F.col("__f2")
-    m1, m2 = F.col("__m1"), F.col("__m2")
-    complete = called(c1, c2) & called(f1, f2) & called(m1, m2)
-    from_f = lambda x: (x == f1) | (x == f2)
-    from_m = lambda x: (x == m1) | (x == m2)
-    consistent = (from_f(c1) & from_m(c2)) | (from_m(c1) & from_f(c2))
 
     def dose(x1, x2):
         return (
-            F.when(x1 != ref, 1).otherwise(0)
-            + F.when(x2 != ref, 1).otherwise(0)
+            F.when(F.col(x1) != ref, 1).otherwise(0)
+            + F.when(F.col(x2) != ref, 1).otherwise(0)
         ).cast("long")
 
     ok = complete & consistent
     site = piv.select(
         F.when(ok, 1).otherwise(0).cast("long").alias("__used"),
-        F.when(ok, dose(c1, c2)).alias("__tc"),
-        F.when(ok, dose(f1, f2)).alias("__tf"),
-        F.when(ok, dose(m1, m2)).alias("__tm"),
+        F.when(ok, dose("c1", "c2")).alias("__tc"),
+        F.when(ok, dose("__f1", "__f2")).alias("__tf"),
+        F.when(ok, dose("__m1", "__m2")).alias("__tm"),
     )
     hf = F.when(F.col("__tf") == 1, 1).otherwise(0).cast("long")
     hm = F.when(F.col("__tm") == 1, 1).otherwise(0).cast("long")

@@ -179,7 +179,6 @@ def near_dedup_incremental(
     repartition_to: int | None = None,
     max_bucket_size: int | None = None,
     base_band_keys: DataFrame | None = None,
-    base_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental near-duplicate removal: dedup a NEW batch against an
     already-clean BASE corpus — the recurring-crawl pipeline shape.
@@ -209,18 +208,8 @@ def near_dedup_incremental(
     recurring-crawl shape; without it the base still pays a linear
     signature pass per batch (and at fixture scale the extra survivor
     jobs outweigh the pair savings — the win needs the index or a base
-    that dwarfs the batch).
-
-    base_shingles: the corpus's persisted shingle-set sidecar
-    (`minhash_shingle_sidecar` output, written beside the band-key
-    index). With it, Jaccard verification joins candidate ids against
-    precomputed sets instead of scanning base TEXTS and tokenizing each
-    candidate instance — with base_band_keys AND base_shingles together
-    the base's text payloads are never read at all: the per-batch cost
-    is the batch's own signatures + the pruned 12-byte index scan + a
-    candidate-pruned sidecar probe. Jaccards are bit-identical (the
-    sidecar stores exactly the `array_distinct`'d operand; intersection
-    and sizes are order-insensitive)."""
+    that dwarfs the batch). Verification reads the candidate base texts
+    through the broadcast probe of `minhash_near_dup_pairs`."""
     b = base.withColumn("__nw", F.lit(False))
     n = new.withColumn("__nw", F.lit(True))
     u = b.unionByName(n)
@@ -254,15 +243,6 @@ def near_dedup_incremental(
             .withColumn("new", F.lit(False))
             .unionByName(nk.withColumn("new", F.lit(True)))
         )
-    sets = None
-    if base_shingles is not None:
-        # Verification operand sets: the base side from the persisted
-        # sidecar, the batch side tokenized fresh (batch-sized). The
-        # union replaces the full (base ∪ new) TEXT scan in the verify
-        # regroup — base text payloads are never read.
-        sets = base_shingles.select("id", "shingles").unionByName(
-            minhash_shingle_sidecar(new, id_col, shingles)
-        )
     pairs = minhash_near_dup_pairs(
         u,
         id_col,
@@ -274,7 +254,6 @@ def near_dedup_incremental(
         max_bucket_size=max_bucket_size,
         incremental_col="__nw",
         band_keys=keys,
-        shingle_sets=sets,
     ).select("id_a", "id_b")
     comp = connected_components(pairs, method=method)
     # Base/new flag for the component members: ids are unique across
@@ -465,25 +444,6 @@ def minhash_band_keys(
     )
 
 
-def minhash_shingle_sidecar(
-    df: DataFrame, id_col: str, shingles: Column
-) -> DataFrame:
-    """The persistable SHINGLE-SET sidecar of a corpus: (id, shingles
-    ARRAY<STRING>), the `array_distinct`'d shingle set of every document
-    — exactly the operand Jaccard verification computes from text on
-    every batch. Write it beside `minhash_band_keys`' index at
-    corpus-build time and hand it to
-    `near_dedup_incremental(base_shingles=...)`: verification then reads
-    precomputed sets for the base side instead of scanning base TEXTS
-    and re-tokenizing every candidate per batch. Like the band-key
-    index, the shingle definition is part of the sidecar's identity —
-    a batch verified with different shingles against a stored sidecar
-    computes wrong Jaccards; store the parameters alongside."""
-    return df.select(
-        _c(id_col).alias("id"), F.array_distinct(shingles).alias("shingles")
-    )
-
-
 def minhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -497,7 +457,6 @@ def minhash_near_dup_pairs(
     return_dropped: bool = False,
     incremental_col: str | None = None,
     band_keys: DataFrame | None = None,
-    shingle_sets: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate id pairs via banded MinHash LSH.
 
@@ -549,17 +508,6 @@ def minhash_near_dup_pairs(
     Jaccard verification (scanned with the candidate prune, never
     re-hashed). num_hashes/bands/shingles must match the index's build
     parameters.
-
-    shingle_sets: precomputed (id, shingles ARRAY<STRING>) relation
-    (`minhash_shingle_sidecar` output, or a union of sidecars) that
-    REPLACES `df` in Jaccard verification: the regroup joins the
-    candidate ids against precomputed `array_distinct`'d sets instead of
-    scanning `df`'s text payloads and tokenizing each candidate
-    instance. Bit-identical Jaccards: intersection/size are order-
-    insensitive and the sidecar stores exactly `array_distinct(
-    shingles)`. With band_keys AND shingle_sets both supplied, `df` is
-    never touched. The shingle definition must match the sidecar's
-    build parameters.
 
     Output: id_a, id_b (+ jaccard DOUBLE when verifying).
     """
@@ -681,21 +629,9 @@ def minhash_near_dup_pairs(
     # projection: the extra pair-side aggregate + re-explode cost MORE
     # than the saved tokenizations at every measured shape, 2.02 s →
     # 2.48 s min-of-3; kept the instance-stacked form.)
-    if shingle_sets is not None:
-        # Sidecar arm (round 16, guide §6/§2.3): the per-id sets are
-        # precomputed, so the probe side scans (id, shingles) rows
-        # instead of text payloads and pays zero tokenization — the
-        # per-batch verify cost stops re-deriving base-side sets.
-        joined = shingle_sets.join(
-            F.broadcast(stacked),
-            shingle_sets["id"] == F.col("__id"),
-        ).select("id_a", "id_b", "__id", F.col("shingles").alias("__sh"))
-    else:
-        joined = df.join(
-            F.broadcast(stacked), df[id_col] == F.col("__id")
-        ).select(
-            "id_a", "id_b", "__id", F.array_distinct(shingles).alias("__sh")
-        )
+    joined = df.join(
+        F.broadcast(stacked), df[id_col] == F.col("__id")
+    ).select("id_a", "id_b", "__id", F.array_distinct(shingles).alias("__sh"))
     regroup = (
         joined
         .groupBy("id_a", "id_b")

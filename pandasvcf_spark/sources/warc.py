@@ -139,20 +139,19 @@ def read_warc_gz(
 
     Works on `.warc.gz` (member-per-record) and uncompressed `.warc`
     (single "member" = whole file, then the record walker splits)."""
-    import pandas as pd
-
     if isinstance(paths, str):
         paths = [paths]
     if not paths:
         return spark.createDataFrame([], WARC_DDL)
-    meta = spark.createDataFrame(
-        pd.DataFrame({"path": sorted(paths)})
-    ).repartition(len(paths))
+    paths = sorted(paths)
     keep = set(types) if types is not None else None
 
     def scan(batches):
+        import pandas as pd
+
         for pdf in batches:
-            for path in pdf["path"]:
+            for rid in pdf["id"]:
+                path = paths[rid]
                 rows = {
                     k: []
                     for k in (
@@ -182,7 +181,10 @@ def read_warc_gz(
                             rows[k].append(rec[k])
                 yield pd.DataFrame(rows)
 
-    return meta.mapInPandas(scan, WARC_DDL)
+    # One file per partition, looked up from the closure by id: no path
+    # table, no shuffle.
+    n = len(paths)
+    return spark.range(0, n, 1, n).mapInPandas(scan, WARC_DDL)
 
 
 def http_payload(

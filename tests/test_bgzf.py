@@ -13,6 +13,7 @@ from pandasvcf_spark.sources.bgzf import (
     bgzf_block_offsets,
     is_bgzf,
     read_bgzf_lines,
+    read_bgzf_virtual_ranges,
     write_bgzf,
 )
 from pandasvcf_spark.sources.vcf import read_vcf
@@ -243,3 +244,31 @@ def test_real_bgzf_fixture_line_equality(spark):
 def test_non_bgzf_raises(spark):
     with pytest.raises(ValueError, match="not BGZF"):
         read_bgzf_lines(spark, GOLDEN_GZ).count()
+
+
+def test_virtual_ranges_exact_lines_one_range_per_task(spark, tmp_path):
+    """read_bgzf_virtual_ranges returns exactly the records between each
+    range's tabix-style voffsets: 16-byte records in 50-byte blocks put
+    records across block edges, record 25 at uoffset 0 of block 8 and
+    the end of record 49 at the EOF block. Each range is one partition,
+    spread without a shuffle."""
+    recs = [f"chr1\t{i:06d}\tA\tC" for i in range(50)]  # 15 chars + \n
+    p = str(tmp_path / "regions.vcf.gz")
+    write_bgzf(p, "".join(r + "\n" for r in recs).encode(), block_raw_bytes=50)
+    offsets = bgzf_block_offsets(p)  # 16 data blocks + the EOF block
+
+    def vo(i):  # voffset of record i's first byte
+        blk, uoff = divmod(16 * i, 50)
+        return offsets[blk] << 16 | uoff
+
+    spans = [(1, 4), (20, 25), (45, 50), (5, 41)]
+    assert vo(25) & 0xFFFF == 0 and vo(50) == offsets[-1] << 16
+    df = read_bgzf_virtual_ranges(spark, p, [(vo(a), vo(b)) for a, b in spans])
+    got = [[r.value for r in part] for part in df.rdd.glom().collect()]
+    assert got == [recs[a:b] for a, b in spans]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+    stale = [(vo(0), (offsets[3] + 1) << 16)]  # coffset inside block 3
+    with pytest.raises(Exception, match="block boundary"):
+        read_bgzf_virtual_ranges(spark, p, stale).collect()

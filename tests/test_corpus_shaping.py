@@ -641,68 +641,6 @@ def test_incremental_with_stored_index_matches(spark, tmp_path):
     assert with_idx == without == {102, 201}
 
 
-def test_incremental_with_shingle_sidecar_matches(spark, tmp_path):
-    """near_dedup_incremental(base_band_keys=..., base_shingles=stored
-    sidecar) selects the identical survivor set as the self-computing
-    path, and the verified pair Jaccards are BIT-identical — the sidecar
-    stores exactly the array_distinct'd operand the verify stage would
-    have derived from base texts (round-16 optimization: with index +
-    sidecar the base's text payloads are never read)."""
-    import struct
-
-    from pyspark.sql import functions as F
-
-    from pandasvcf_spark.functions.text import word_ngrams_expr
-    from pandasvcf_spark.operators.dedup import (
-        minhash_band_keys,
-        minhash_near_dup_pairs,
-        minhash_shingle_sidecar,
-        near_dedup_incremental,
-    )
-
-    base, new = _incr_fixture(spark)
-    sh = word_ngrams_expr("text", 3)
-    idx_path = str(tmp_path / "baseidx")
-    sc_path = str(tmp_path / "basesets")
-    minhash_band_keys(base, "doc_id", sh).write.parquet(idx_path)
-    minhash_shingle_sidecar(base, "doc_id", sh).write.parquet(sc_path)
-    idx = spark.read.parquet(idx_path)
-    sets = spark.read.parquet(sc_path)
-    with_sidecar = {
-        r.doc_id
-        for r in near_dedup_incremental(
-            base, new, "doc_id", sh, min_jaccard=0.8,
-            base_band_keys=idx, base_shingles=sets,
-        ).collect()
-    }
-    without = {
-        r.doc_id
-        for r in near_dedup_incremental(
-            base, new, "doc_id", sh, min_jaccard=0.8
-        ).collect()
-    }
-    assert with_sidecar == without == {102, 201}
-
-    # pair-level bit-identity of the verified Jaccards
-    u = base.withColumn("__nw", F.lit(False)).unionByName(
-        new.withColumn("__nw", F.lit(True))
-    )
-    all_sets = sets.unionByName(
-        minhash_shingle_sidecar(new, "doc_id", sh)
-    )
-    plain = minhash_near_dup_pairs(
-        u, "doc_id", sh, min_jaccard=0.1, incremental_col="__nw"
-    )
-    sided = minhash_near_dup_pairs(
-        u, "doc_id", sh, min_jaccard=0.1, incremental_col="__nw",
-        shingle_sets=all_sets,
-    )
-    pack = lambda r: (r.id_a, r.id_b, struct.pack("d", r.jaccard))  # noqa: E731
-    assert sorted(map(pack, plain.collect())) == sorted(
-        map(pack, sided.collect())
-    )
-
-
 def test_band_keys_shape_and_determinism(spark):
     from pandasvcf_spark.functions.text import word_ngrams_expr
     from pandasvcf_spark.operators.dedup import minhash_band_keys
