@@ -265,6 +265,41 @@ def join_recent(
     return out
 
 
+def _batch_dir_sink(
+    stream_df: DataFrame,
+    out_path: str,
+    checkpoint_path: str,
+    query_name: str,
+    trigger: dict | None,
+    rows_of,
+    after_write=None,
+    skip_empty: bool = True,
+):
+    """Start a foreachBatch query that overwrites `out_path/batch_id=N`
+    with `rows_of(batch_df, N)` for every micro-batch, then calls
+    `after_write(batch_dir)` if given. Overwriting makes a replayed
+    batch rewrite its own directory instead of duplicating rows.
+    Empty micro-batches write nothing unless `skip_empty` is False.
+    `trigger` is passed to `writeStream.trigger(...)`; None drains the
+    available input and stops (availableNow)."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if skip_empty and batch_df.isEmpty():
+            return
+        batch_dir = f"{out_path}/batch_id={batch_id}"
+        rows_of(batch_df, batch_id).write.mode("overwrite").parquet(batch_dir)
+        if after_write is not None:
+            after_write(batch_dir)
+
+    return (
+        stream_df.writeStream.foreachBatch(process)
+        .queryName(query_name)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
+
+
 def write_stream_partitioned(
     stream_df: DataFrame,
     out_path: str,
@@ -280,20 +315,13 @@ def write_stream_partitioned(
     the source offsets; together they give end-to-end exactly-once for
     file sources. Returns the started StreamingQuery (await it yourself
     for availableNow drains)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
+    return _batch_dir_sink(
+        stream_df, out_path, checkpoint_path, query_name,
+        # processingTime 0 is Spark's default trigger
+        None if available_now else {"processingTime": "0 seconds"},
+        lambda batch_df, _batch_id: batch_df,
+        skip_empty=False,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_stream_to_memory(

@@ -1,46 +1,66 @@
-"""Streaming corpus ingest with incremental near-dedup — the composition
-a continuously-crawling training-data pipeline runs: documents arrive as a
+"""Streaming corpus ingest with incremental dedup — the composition a
+continuously-crawling training-data pipeline runs: documents arrive as a
 stream, each micro-batch is deduped (a) within itself and (b) against
 everything already accepted, and only the survivors land in the corpus.
 
-Built from pieces that are each already correctness-checked: the JSONL/file
-stream sources, `near_dedup_documents` (intra-batch), `near_dedup_incremental`
-(batch vs accumulated corpus, old×old pair term eliminated in-stage), and
-the batch_id-directory idempotence of `write_stream_partitioned` — a
-replayed micro-batch (failure between sink write and checkpoint commit)
-overwrites its own directory instead of double-inserting, and because the
-replay re-reads the SAME accumulated corpus state (its own earlier partial
-write is excluded by reading only smaller batch_ids), it reproduces the
-same survivor set.
+Three dedup tiers share one micro-batch loop (`_ingest_stream`): MinHash
+near-dup (`dedup_ingest_stream`), SemDeDup (`semdedup_ingest_stream`) and
+content-defined chunks (`cdc_ingest_stream`). A tier supplies only its
+intra-batch dedup, its index builder, its incremental operator and, for
+the semantic tier, the column its index is partitioned by.
+
+Per micro-batch N (inside foreachBatch, so plain batch operators apply):
+  1. intra-batch dedup, with a deterministic min-id survivor rule so a
+     replayed batch reproduces its survivors;
+  2. list the `corpus_path/batch_id=K` directories with K < N. Strictly
+     smaller ids only: a replayed batch (failure between sink write and
+     checkpoint commit) never sees its own earlier partial write and
+     re-reads the same accumulated state;
+  3. read the index of the accumulated corpus: the seed index, the newest
+     committed `_index_ckpt_K` roll-up and the `_index` of every prior
+     batch after it. When an uncovered prior batch lacks a committed
+     `_index` (a corpus written by the pre-index layout), the prior
+     batches' text is indexed in this batch instead — lossless, just
+     linear in corpus size;
+  4. the tier's incremental operator drops the batch rows the
+     accumulated corpus already holds; the accumulated corpus is never
+     re-tokenized, re-assigned or re-chunked, so per-batch cost scales
+     with the batch, not the corpus;
+  5. overwrite `corpus_path/batch_id=N` with the survivors, then build
+     `batch_id=N/_index` from a read of that directory, so the index
+     describes exactly the rows the sink wrote. The overwrite clears the
+     old `_index` too, so a replay rebuilds both. `_index` is
+     underscore-hidden: the corpus root still reads as a plain survivor
+     table.
+
+The seed corpus: a passed seed index is used as given; otherwise
+`seed_df` is indexed once, at stream start. Index parameters (shingles and
+hash counts, centroids, chunk lengths) are part of the index identity:
+change them and rebuild the indexes.
+
+`index_compact_every`: once more than that many per-batch `_index` dirs
+accrete since the last roll-up, they are compacted into ONE
+`corpus_path/_index_ckpt_N` (`_maybe_compact_index`), so per-batch index
+listings and footer reads stay flat in batch count. None disables it.
+
+`trigger` passes through to `writeStream.trigger(...)`; the default
+``{"availableNow": True}`` drains currently-available input and stops (the
+batch-backfill / test mode), ``{"processingTime": "1 minute"}`` keeps the
+query live. Directory discovery goes through the Hadoop FileSystem API
+resolved from `corpus_path`'s scheme, so local paths, `file://` URIs, HDFS
+and s3a/gs object stores all work. Sink idempotence is layout-based, the
+`write_stream_partitioned` contract.
 """
 
 from __future__ import annotations
 
 import re
+from functools import reduce
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
-
-def _list_prior_batch_dirs(spark, corpus_path: str, batch_id: int) -> list[str]:
-    """List `corpus_path/batch_id=K` directories with K < batch_id through
-    the Hadoop FileSystem API — resolved from the path's own scheme, so the
-    same code lists local paths, `file://` URIs, HDFS, and s3a/gs object
-    stores (the deployment the 100 TB ingest story assumes). Driver-side,
-    one RPC per micro-batch over ~#batches entries — metadata-sized."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(corpus_path)
-    fs = root.getFileSystem(hconf)
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        m = re.fullmatch(r"batch_id=(\d+)", name)
-        if st.isDirectory() and m and int(m.group(1)) < batch_id:
-            out.append(st.getPath().toString())
-    return out
-
+from pandasvcf_spark.streaming.events import _batch_dir_sink
 
 INDEX_DIR = "_index"  # hidden from parquet readers (underscore prefix),
 # so the corpus root and each batch directory still read as plain
@@ -52,11 +72,7 @@ INDEX_CKPT_PREFIX = "_index_ckpt_"  # rolled-up index checkpoint dirs —
 # partition-discovers a name=value dir even when underscore-prefixed,
 # which would conflict with the batch_id=N layout on corpus-root reads
 
-
-def _batch_id_of(d: str) -> int:
-    m = re.search(r"batch_id=(\d+)/?$", d)
-    assert m, d
-    return int(m.group(1))
+_BATCH_PREFIX = "batch_id="
 
 
 def _fs_of(spark, path: str):
@@ -70,32 +86,49 @@ def _exists(spark, path: str) -> bool:
     return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
 
 
-def _index_ckpts(spark, corpus_path: str) -> list[tuple[str, int, bool]]:
-    """All `corpus_path/_index_ckpt_N` dirs as (path, N, committed) —
-    committed means the parquet `_SUCCESS` marker is present."""
-    fs, jvm = _fs_of(spark, corpus_path)
-    root = jvm.org.apache.hadoop.fs.Path(corpus_path)
-    if not fs.exists(root):
+def _dir_id(path: str, prefix: str) -> int | None:
+    """N when the last component of `path` is `<prefix>N`, else None."""
+    name = path.rstrip("/").rsplit("/", 1)[-1]
+    m = re.fullmatch(re.escape(prefix) + r"(\d+)", name)
+    return int(m.group(1)) if m else None
+
+
+def _list_dirs(spark, root: str, prefix: str) -> list[tuple[int, str]]:
+    """(N, path) for every `root/<prefix>N` child directory, sorted by N;
+    a missing root lists as empty. Listed through the Hadoop FileSystem
+    API resolved from the root's own scheme, so the same code lists local
+    paths, `file://` URIs, HDFS and s3a/gs object stores. Driver-side,
+    one RPC over ~#batches entries — metadata-sized."""
+    fs, jvm = _fs_of(spark, root)
+    p = jvm.org.apache.hadoop.fs.Path(root)
+    if not fs.exists(p):
         return []
     out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        m = re.fullmatch(r"_index_ckpt_(\d+)", name)
-        if st.isDirectory() and m:
-            p = st.getPath().toString()
-            out.append((p, int(m.group(1)), _exists(spark, f"{p}/_SUCCESS")))
-    return out
+    for st in fs.listStatus(p):
+        n = _dir_id(st.getPath().getName(), prefix)
+        if st.isDirectory() and n is not None:
+            out.append((n, st.getPath().toString()))
+    return sorted(out)
+
+
+def _list_prior_batch_dirs(spark, corpus_path: str, batch_id: int) -> list[str]:
+    """The `corpus_path/batch_id=K` directories with K < batch_id, by K."""
+    return [
+        p for n, p in _list_dirs(spark, corpus_path, _BATCH_PREFIX)
+        if n < batch_id
+    ]
 
 
 def _latest_index_ckpt(spark, corpus_path: str) -> tuple[str, int] | None:
     """Newest COMMITTED rolled-up index checkpoint (path, N) — N is the
-    highest batch_id the roll-up covers — or None. Uncommitted dirs
-    (a crash mid-compaction) are invisible here and deleted/rewritten
-    by the next `_maybe_compact_index`."""
-    committed = [
-        (p, n) for p, n, ok in _index_ckpts(spark, corpus_path) if ok
-    ]
-    return max(committed, key=lambda t: t[1]) if committed else None
+    highest batch_id the roll-up covers — or None. Committed means the
+    parquet `_SUCCESS` marker is present; uncommitted dirs (a crash
+    mid-compaction) are invisible here and deleted by the next
+    `_maybe_compact_index`."""
+    for n, p in reversed(_list_dirs(spark, corpus_path, INDEX_CKPT_PREFIX)):
+        if _exists(spark, f"{p}/_SUCCESS"):
+            return p, n
+    return None
 
 
 def _prior_index_dirs(
@@ -106,20 +139,16 @@ def _prior_index_dirs(
     compacted relation) plus `<dir>/_index` for each prior batch
     SINCE it — or None when any uncovered prior batch lacks a
     committed index (`_index/_SUCCESS`): a corpus written by an older
-    layout, where the only lossless option is the legacy full
-    re-hash/re-assign path. All-or-nothing because a partial index
-    silently finds no candidates for the uncovered base docs (the
-    `minhash_band_keys` identity contract). The checkpoint bounds the
-    per-batch listing/footer cost in BATCH COUNT (round-14 verdict
-    missing #2): without it every micro-batch lists and reads one
-    parquet dir per prior batch, forever."""
+    layout, which the caller re-indexes from its text. All-or-nothing
+    because a partial index silently finds no candidates for the
+    uncovered base docs (the `minhash_band_keys` identity contract)."""
     if not prior_dirs:
         return []
     ckpt = _latest_index_ckpt(spark, corpus_path)
     upto = ckpt[1] if ckpt else -1
     out = [ckpt[0]] if ckpt else []
-    for d in sorted(prior_dirs, key=_batch_id_of):
-        if _batch_id_of(d) <= upto:
+    for d in prior_dirs:
+        if _dir_id(d, _BATCH_PREFIX) <= upto:
             continue  # covered by the roll-up
         if not _exists(spark, f"{d}/{INDEX_DIR}/_SUCCESS"):
             return None
@@ -131,64 +160,131 @@ def _maybe_compact_index(
     spark,
     corpus_path: str,
     prior_dirs: list[str],
+    idx_dirs: list[str] | None,
     every: int | None,
     partition_by: list | None = None,
-) -> None:
-    """Roll accreted per-batch `_index` dirs into ONE
-    `corpus_path/_index_ckpt_N` (N = highest covered batch_id) once
-    more than `every` have piled up since the newest checkpoint —
-    `compact_parquet` over [old checkpoint] + the new dirs, so each
-    roll-up reads the PREVIOUS roll-up plus `every` small dirs, never
-    the whole history (amortized-flat maintenance).
+) -> list[str] | None:
+    """Roll the per-batch `_index` dirs of the read set `idx_dirs`
+    (`_prior_index_dirs` of the `batch_id`-sorted `prior_dirs`) into ONE
+    `corpus_path/_index_ckpt_N` (N = the highest prior batch_id) once
+    more than `every` have piled up since the newest checkpoint, and
+    return the new read set: [the roll-up] after a roll-up, else
+    `idx_dirs` unchanged. The roll-up is `compact_parquet` over the read
+    set itself, i.e. the previous roll-up plus the new dirs, never the
+    whole history (amortized-flat maintenance); `partition_by` keeps a
+    partitioned index layout.
 
-    Replay/crash safety: only STRICTLY PRIOR batches are ever rolled
-    up (the current batch's own index is excluded by construction —
-    `prior_dirs` is the < batch_id listing), so a replayed batch never
-    reads its own earlier output through the checkpoint. Idempotent:
-    a committed same-N checkpoint short-circuits (the replay case); an
-    uncommitted one (crash mid-compaction) is deleted and rewritten —
-    until its `_SUCCESS` lands, readers ignore it and fall back to the
-    per-batch dirs, which are KEPT after roll-up (they are the
-    rebuild source of truth and underscore-hidden from corpus
-    readers; the read path just stops touching them). Superseded
-    checkpoints are deleted best-effort AFTER the new one commits —
-    the newest-committed rule makes that purely cosmetic."""
-    if every is None or not prior_dirs:
-        return
-    ckpt = _latest_index_ckpt(spark, corpus_path)
-    upto = ckpt[1] if ckpt else -1
-    beyond = sorted(
-        (d for d in prior_dirs if _batch_id_of(d) > upto),
-        key=_batch_id_of,
-    )
-    if len(beyond) <= every:
-        return
-    idx = []
-    for d in beyond:
-        if not _exists(spark, f"{d}/{INDEX_DIR}/_SUCCESS"):
-            return  # legacy layout — nothing to roll up losslessly
-        idx.append(f"{d}/{INDEX_DIR}")
-    new_upto = _batch_id_of(beyond[-1])
+    Replay/crash safety: only STRICTLY PRIOR batches are ever rolled up,
+    so a replayed batch never reads its own earlier output through the
+    checkpoint. An uncommitted checkpoint dir (crash mid-compaction) is
+    invisible to readers, which fall back to the per-batch dirs; it is
+    deleted and rewritten here. The per-batch dirs are KEPT after the
+    roll-up (they are the rebuild source of truth and underscore-hidden
+    from corpus readers; the read path just stops touching them).
+    Superseded checkpoints are deleted best-effort AFTER the new one
+    commits — the newest-committed rule makes that purely cosmetic."""
+    n_batch = sum(p.endswith(f"/{INDEX_DIR}") for p in idx_dirs or [])
+    if every is None or n_batch <= every:
+        return idx_dirs
+    new_upto = _dir_id(prior_dirs[-1], _BATCH_PREFIX)
     out = f"{corpus_path}/{INDEX_CKPT_PREFIX}{new_upto}"
     fs, jvm = _fs_of(spark, corpus_path)
     if _exists(spark, out):
-        if _exists(spark, f"{out}/_SUCCESS"):
-            return  # a replay already rolled this prefix up
         fs.delete(jvm.org.apache.hadoop.fs.Path(out), True)
     from pandasvcf_spark.plans.bucketing import compact_parquet
 
-    compact_parquet(
-        spark,
-        ([ckpt[0]] if ckpt else []) + idx,
-        out,
-        partition_by=partition_by,
-    )
-    for p, n, _ok in _index_ckpts(spark, corpus_path):
+    compact_parquet(spark, idx_dirs, out, partition_by=partition_by)
+    for n, p in _list_dirs(spark, corpus_path, INDEX_CKPT_PREFIX):
         if n < new_upto:
-            try:  # superseded — best-effort cleanup
+            try:  # superseded or uncommitted debris — best-effort cleanup
                 fs.delete(jvm.org.apache.hadoop.fs.Path(p), True)
-            except Exception:
+            except Py4JJavaError:
                 pass
+    return [out]
+
+
+def _ingest_stream(
+    stream_df: DataFrame,
+    corpus_path: str,
+    checkpoint_path: str,
+    query_name: str,
+    trigger: dict | None,
+    index_compact_every: int | None,
+    seed_df: DataFrame | None,
+    seed_index: DataFrame | None,
+    dedup_batch,
+    build_index,
+    dedup_against,
+    partition_col: str | None = None,
+    reads_base_text: bool = False,
+):
+    """The micro-batch loop of the module docstring. A tier supplies
+    `dedup_batch(batch_df)`, the intra-batch survivors;
+    `build_index(df)`, the index rows of a survivor table, used for the
+    seed, the legacy fallback and each batch's own `_index`;
+    `dedup_against(batch_clean, base_index, base_text)`, the rows of
+    `batch_clean` the accumulated corpus does not already hold, where
+    `base_text` is seed ∪ prior-batch text when `reads_base_text` and
+    None otherwise (so tiers that never read it pay no per-batch listing
+    or footer read of the prior batches); and `partition_col`, the
+    column its index is written and compacted partitioned by."""
+    spark = stream_df.sparkSession
+    if seed_index is None and seed_df is not None:
+        # index the seed ONCE per stream start, not once per micro-batch
+        seed_index = build_index(seed_df).localCheckpoint(eager=True)
+    partition_by = [partition_col] if partition_col else None
+
+    def survivors_of(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        batch_clean = dedup_batch(batch_df)
+        indexes = [] if seed_index is None else [seed_index]
+        texts = [] if seed_df is None else [seed_df]
+        prior_dirs = _list_prior_batch_dirs(spark, corpus_path, batch_id)
+        if prior_dirs:
+            idx_dirs = _maybe_compact_index(
+                spark, corpus_path, prior_dirs,
+                _prior_index_dirs(spark, corpus_path, prior_dirs),
+                index_compact_every, partition_by,
+            )
+            if reads_base_text or idx_dirs is None:
+                texts.append(spark.read.parquet(*prior_dirs))
+            if idx_dirs is None:
+                indexes.append(build_index(texts[-1]))  # legacy layout
+            elif partition_col:
+                # one read PER ROOT, unioned: the roll-up
+                # (_index_ckpt_N/cell=K) and the per-batch dirs
+                # (batch_id=M/_index/cell=K) have different relative
+                # layouts, and a single multi-path read trips Spark's
+                # CONFLICTING_DIRECTORY_STRUCTURES partition discovery.
+                # Partition pruning still pushes into each relation.
+                indexes += [spark.read.parquet(d) for d in idx_dirs]
+            else:
+                indexes.append(spark.read.parquet(*idx_dirs))
+        if not indexes:
+            return batch_clean
+        return dedup_against(
+            batch_clean,
+            reduce(DataFrame.unionByName, indexes),
+            reduce(DataFrame.unionByName, texts) if reads_base_text else None,
+        )
+
+    def write_index(batch_dir: str) -> None:
+        idx = build_index(spark.read.parquet(batch_dir))
+        writer = idx.write
+        if partition_col:
+            # repartition by the partition column first: a dynamic-partition
+            # write otherwise opens one writer per value in EVERY task
+            # (tasks × values small files + a per-task sort; measured
+            # 10.7 s / 2048 files → 2.5 s / 64 files on the 30× bench
+            # index, same rows)
+            writer = idx.repartition(partition_col).write.partitionBy(
+                partition_col
+            )
+        writer.mode("overwrite").parquet(f"{batch_dir}/{INDEX_DIR}")
+
+    return _batch_dir_sink(
+        stream_df, corpus_path, checkpoint_path, query_name, trigger,
+        survivors_of, write_index,
+    )
 
 
 def dedup_ingest_stream(
@@ -206,152 +302,51 @@ def dedup_ingest_stream(
     seed_band_keys: DataFrame | None = None,
     index_compact_every: int | None = 16,
 ):
-    """Start a streaming query that appends near-dedup survivors of every
-    micro-batch to `corpus_path/batch_id=N`.
-
-    `trigger` passes through to `writeStream.trigger(...)`; the default
-    ``{"availableNow": True}`` drains currently-available input and stops
-    (the batch-backfill / test mode). A continuously-crawling deployment
-    passes ``{"processingTime": "1 minute"}`` to keep the query live.
-    Prior-batch discovery goes through the Hadoop FileSystem API resolved
-    from `corpus_path`'s scheme, so local paths, `file://` URIs, HDFS and
-    s3a/gs object stores all work.
-
-    Per micro-batch (inside foreachBatch, so plain batch operators apply):
-      1. intra-batch near-dedup (`near_dedup_documents`, min-id survivor);
-      2. incremental dedup of the remainder against the accumulated
-         corpus = `seed_df` (optional initial clean corpus) ∪ all
-         batch_id < N survivor directories — strictly-smaller batch ids
-         only, so a replayed batch never sees its own earlier partial
-         output and replays are deterministic;
-      3. overwrite `corpus_path/batch_id=N` with the survivors, then
-         `corpus_path/batch_id=N/_index` with THEIR `minhash_band_keys`
-         rows (underscore-hidden, so the corpus still reads as a plain
-         survivor table).
+    """Start a streaming query that appends the MinHash near-dedup
+    survivors of every micro-batch to `corpus_path/batch_id=N` (the
+    module docstring gives the per-batch protocol). Intra-batch:
+    `near_dedup_documents`; against the corpus: `near_dedup_incremental`;
+    index: `minhash_band_keys` rows (id, band, key).
 
     `shingle_fn` is a zero-arg callable returning the shingle Column
     (e.g. ``lambda: word_ngrams_expr("text", 3)``) — a callable because
     the expression must be rebuilt inside each micro-batch's plan.
 
-    Scale notes (round-13 verdict task 2 — the per-batch base re-hash
-    was the 100 TB wall): each batch persists its survivors' LSH index
-    beside them and passes the UNION of all prior indexes as
-    `base_band_keys` to `near_dedup_incremental`, so the accumulated
-    corpus is never re-tokenized or re-hashed — per batch it costs a
-    scan of 12-byte index rows plus a candidate-pruned text lookup for
-    Jaccard verification (its own bench shows indexed ≈ flat vs
-    re-hash ≈ linear in base size). The seed corpus gets the same
-    treatment: pass its persisted index as `seed_band_keys`, or it is
-    hashed ONCE at stream start (localCheckpoint) instead of once per
-    batch. A corpus written by the pre-index layout (any prior batch
-    missing `_index/_SUCCESS`) falls back to the legacy full re-hash
-    path — lossless, just linear. Batch-local state lives in the
-    checkpoint; the sink's idempotence is layout-based (a replayed
-    batch overwrites its own directory, index included), same contract
-    as `write_stream_partitioned`.
-
-    `index_compact_every` (round-15, the round-14 verdict's successor
-    concern): once more than that many per-batch `_index` dirs accrete
-    since the last roll-up, they compact into ONE
-    `corpus_path/_index_ckpt_N` (`_maybe_compact_index`), so per-batch
-    index listings/footer reads stay flat in BATCH COUNT — without it a
-    year-long stream pays one dir per prior micro-batch forever. None
-    disables (the pre-round-15 behavior)."""
+    Scale notes: the union of the prior indexes is passed as
+    `base_band_keys`, so the accumulated corpus is never re-tokenized or
+    re-hashed — per batch it costs a scan of 12-byte index rows plus a
+    candidate-pruned text lookup for Jaccard verification (its own bench
+    shows indexed ≈ flat vs re-hash ≈ linear in base size). Because
+    verification reads base texts, this tier reads the prior batches'
+    text every batch, and `seed_band_keys` (the seed's persisted index)
+    needs `seed_df` beside it: passing it alone raises ValueError."""
     from pandasvcf_spark.operators.dedup import (
         minhash_band_keys,
         near_dedup_documents,
         near_dedup_incremental,
     )
 
-    spark = stream_df.sparkSession
-    seed_keys = seed_band_keys
-    if seed_df is not None and seed_keys is None:
-        # hash the seed ONCE per stream start, not once per micro-batch
-        seed_keys = minhash_band_keys(
-            seed_df,
-            id_col,
-            shingle_fn(),
-            num_hashes=num_hashes,
-            bands=bands,
-        ).localCheckpoint(eager=True)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        shingles = shingle_fn()
-        batch_clean = near_dedup_documents(
-            batch_df,
-            id_col,
-            shingles,
-            num_hashes=num_hashes,
-            bands=bands,
-            min_jaccard=min_jaccard,
+    if seed_band_keys is not None and seed_df is None:
+        raise ValueError(
+            "dedup_ingest_stream: seed_band_keys needs seed_df — "
+            "Jaccard verification reads the seed texts"
         )
-        bases = []
-        base_keys = []
-        if seed_df is not None:
-            bases.append(seed_df)
-            base_keys.append(seed_keys)
-        # read only strictly-smaller batch ids: a replayed batch must not
-        # see its own earlier partial write
-        prior_dirs = _list_prior_batch_dirs(spark, corpus_path, batch_id)
-        if prior_dirs:
-            bases.append(spark.read.parquet(*prior_dirs))
-            # roll accreted per-batch indexes into one checkpoint BEFORE
-            # reading, so this batch already pays the bounded read
-            _maybe_compact_index(
-                spark, corpus_path, prior_dirs, index_compact_every
-            )
-            idx_dirs = _prior_index_dirs(spark, corpus_path, prior_dirs)
-            if idx_dirs:
-                base_keys.append(spark.read.parquet(*idx_dirs))
-            elif idx_dirs is None:
-                base_keys = None  # legacy layout — full re-hash
-        if bases:
-            base = bases[0]
-            for extra in bases[1:]:
-                base = base.unionByName(extra)
-            keys = None
-            if base_keys:
-                keys = base_keys[0]
-                for extra in base_keys[1:]:
-                    keys = keys.unionByName(extra)
-            survivors = near_dedup_incremental(
-                base,
-                batch_clean,
-                id_col,
-                shingle_fn(),
-                num_hashes=num_hashes,
-                bands=bands,
-                min_jaccard=min_jaccard,
-                base_band_keys=keys,
-            )
-        else:
-            survivors = batch_clean
-        # survivors may be consumed twice (sink + index) and the index
-        # must describe exactly the rows the sink wrote
-        survivors = survivors.localCheckpoint(eager=True)
-        survivors.write.mode("overwrite").parquet(
-            f"{corpus_path}/batch_id={batch_id}"
-        )
-        # index AFTER the survivor overwrite (which clears the batch
-        # directory, _index included) so a replay rebuilds both
-        minhash_band_keys(
-            survivors,
-            id_col,
-            shingle_fn(),
-            num_hashes=num_hashes,
-            bands=bands,
-        ).write.mode("overwrite").parquet(
-            f"{corpus_path}/batch_id={batch_id}/{INDEX_DIR}"
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    hash_kw = dict(num_hashes=num_hashes, bands=bands)
+    return _ingest_stream(
+        stream_df, corpus_path, checkpoint_path, query_name, trigger,
+        index_compact_every, seed_df, seed_band_keys,
+        dedup_batch=lambda batch_df: near_dedup_documents(
+            batch_df, id_col, shingle_fn(), min_jaccard=min_jaccard,
+            **hash_kw,
+        ),
+        build_index=lambda df: minhash_band_keys(
+            df, id_col, shingle_fn(), **hash_kw
+        ),
+        dedup_against=lambda clean, keys, base: near_dedup_incremental(
+            base, clean, id_col, shingle_fn(), min_jaccard=min_jaccard,
+            base_band_keys=keys, **hash_kw,
+        ),
+        reads_base_text=True,
     )
 
 
@@ -370,161 +365,53 @@ def semdedup_ingest_stream(
     seed_cells: DataFrame | None = None,
     index_compact_every: int | None = 16,
 ):
-    """Streaming SEMANTIC corpus ingest — `dedup_ingest_stream`'s
-    contract carried to embedding space (the SemDeDup tier for a
-    continuously-crawled corpus): append every micro-batch's semantic
-    survivors to `corpus_path/batch_id=N`.
+    """Streaming SEMANTIC corpus ingest — the SemDeDup tier for a
+    continuously-crawled corpus: append every micro-batch's semantic
+    survivors (FULL rows: id, embedding and everything else) to
+    `corpus_path/batch_id=N` (the module docstring gives the per-batch
+    protocol). Intra-batch: `semantic_dedup` with keep="min_id", the
+    DETERMINISTIC policy, so a replayed batch reproduces its survivor
+    set exactly; against the corpus: `semantic_dedup_incremental` with
+    `base_cells`; index: `semantic_cell_index` rows (id, cell, vector),
+    PARTITIONED BY cell, in the per-batch dirs and the roll-ups alike.
 
-    Per micro-batch (inside foreachBatch, so plain batch operators
-    apply):
-      1. intra-batch `semantic_dedup` (keep="min_id" — the
-         DETERMINISTIC policy, so a replayed batch reproduces its
-         survivor set exactly; keep-far depends only on the batch
-         content too, but min-id is the simplest replay argument);
-      2. `semantic_dedup_incremental` of the remainder against the
-         accumulated corpus = `seed_df` ∪ all batch_id < N survivor
-         directories (strictly smaller ids — a replayed batch never
-         sees its own earlier partial output);
-      3. overwrite `corpus_path/batch_id=N` with the surviving FULL
-         rows (id + embedding + everything else — later batches read
-         them back as the base), then `corpus_path/batch_id=N/_index`
-         with THEIR `semantic_cell_index` rows (id, cell, vector),
-         PARTITIONED BY cell.
-
-    Scale shape (round-13 verdict task 2 — the per-batch base
-    re-assignment was the standing 100× concern): each batch persists
-    its survivors' cell index beside them and passes the union of all
-    prior indexes as `base_cells` to `semantic_dedup_incremental`, so
-    the accumulated corpus never pays the k-dot-product nearest-
-    centroid pass again — and because the incremental operator prunes
-    the base to the cells the batch TOUCHES and the index is
-    partitioned by cell, a batch reads only the touched partitions
-    (partition pruning), making per-batch cost scale with the batch,
-    not the corpus. The seed gets the same treatment: pass its
-    persisted index as `seed_cells`, or it is assigned ONCE at stream
-    start. A corpus written by the pre-index layout falls back to the
-    legacy full re-assignment path — lossless, just linear.
+    Scale shape: the accumulated corpus never pays the k-dot-product
+    nearest-centroid pass again, and because the incremental operator
+    prunes the base to the cells the batch TOUCHES, a batch reads only
+    the touched cell partitions of each index. `seed_cells` is the
+    seed's persisted index; it is used with or without `seed_df`.
     `centroids` is the model-sized broadcast literal trained once at
     corpus-build time and is part of the index identity (re-train →
-    rebuild the indexes). Sink idempotence is layout-based, the
-    `write_stream_partitioned` contract, index included.
-    `index_compact_every` rolls accreted per-batch `_index` dirs into
-    one `_index_ckpt_N` as in `dedup_ingest_stream` — here the roll-up
-    keeps the BY-CELL partitioning (compact_parquet partition_by), so
-    the touched-cell prune reads only the touched partitions of the
-    checkpoint too."""
+    rebuild the indexes)."""
     from pandasvcf_spark.operators.dedup import (
         semantic_cell_index,
         semantic_dedup,
         semantic_dedup_incremental,
     )
 
-    spark = stream_df.sparkSession
-    seed_idx = seed_cells
-    if seed_df is not None and seed_idx is None:
-        # assign the seed ONCE per stream start, not once per batch
-        seed_idx = semantic_cell_index(
-            seed_df, centroids, id_col=id_col, vec_col=vec_col
-        ).localCheckpoint(eager=True)
+    vec_kw = dict(id_col=id_col, vec_col=vec_col)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def dedup_batch(batch_df: DataFrame) -> DataFrame:
         keep = semantic_dedup(
-            batch_df,
-            centroids,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            keep="min_id",
-            max_cluster_size=max_cluster_size,
+            batch_df, centroids, threshold=threshold, keep="min_id",
+            max_cluster_size=max_cluster_size, **vec_kw,
         ).select(id_col)
-        batch_clean = batch_df.join(keep, on=id_col)
-        bases = []
-        base_idx = []
-        if seed_df is not None:
-            bases.append(seed_df)
-            base_idx.append(seed_idx)
-        prior_dirs = _list_prior_batch_dirs(spark, corpus_path, batch_id)
-        if prior_dirs:
-            bases.append(spark.read.parquet(*prior_dirs))
-            # roll-up preserves the cell partitioning (partition_by), so
-            # the touched-cell prune still prunes after compaction
-            _maybe_compact_index(
-                spark, corpus_path, prior_dirs, index_compact_every,
-                partition_by=["cell"],
-            )
-            idx_dirs = _prior_index_dirs(spark, corpus_path, prior_dirs)
-            if idx_dirs:
-                # one read PER ROOT, unioned: the ckpt
-                # (_index_ckpt_N/cell=K) and per-batch dirs
-                # (batch_id=M/_index/cell=K) have different relative
-                # layouts, and a single multi-path read trips Spark's
-                # CONFLICTING_DIRECTORY_STRUCTURES partition discovery.
-                # Cell pruning still pushes into each relation.
-                parts = [
-                    spark.read.parquet(d).select(id_col, "cell", vec_col)
-                    for d in idx_dirs
-                ]
-                merged = parts[0]
-                for extra in parts[1:]:
-                    merged = merged.unionByName(extra)
-                base_idx.append(merged)
-            elif idx_dirs is None:
-                base_idx = None  # legacy layout — full re-assignment
-        if bases:
-            cells_arg = None
-            if base_idx:
-                cells_arg = base_idx[0]
-                for extra in base_idx[1:]:
-                    cells_arg = cells_arg.unionByName(extra)
-            base_arg = None
-            if cells_arg is None:
-                base_arg = bases[0]
-                for extra in bases[1:]:
-                    base_arg = base_arg.unionByName(extra)
-            surv = semantic_dedup_incremental(
-                base_arg,
-                batch_clean,
-                centroids,
-                threshold=threshold,
-                id_col=id_col,
-                vec_col=vec_col,
-                max_cluster_size=max_cluster_size,
-                base_cells=cells_arg,
-            ).select(id_col, "cell")
-            survivors = batch_clean.join(
-                surv.select(id_col), on=id_col
-            )
-        else:
-            survivors = batch_clean
-        # consumed by both writes; the index must describe exactly the
-        # rows the sink wrote
-        survivors = survivors.localCheckpoint(eager=True)
-        survivors.write.mode("overwrite").parquet(
-            f"{corpus_path}/batch_id={batch_id}"
-        )
-        # index AFTER the survivor overwrite (which clears the batch
-        # directory, _index included); partitioned by cell so later
-        # batches' touched-cell prune reads only those partitions
-        # repartition by the partition column first: a dynamic-partition
-        # write otherwise opens one writer per cell in EVERY task (tasks ×
-        # cells small files + a per-task sort — guide §6; measured 10.7 s /
-        # 2048 files → 2.5 s / 64 files on the 30× bench index, same rows)
-        semantic_cell_index(
-            survivors, centroids, id_col=id_col, vec_col=vec_col
-        ).repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(
-            f"{corpus_path}/batch_id={batch_id}/{INDEX_DIR}"
-        )
+        return batch_df.join(keep, on=id_col)
 
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    def dedup_against(clean, cells, _base_text):
+        surv = semantic_dedup_incremental(
+            None, clean, centroids, threshold=threshold,
+            max_cluster_size=max_cluster_size, base_cells=cells, **vec_kw,
+        )
+        return clean.join(surv.select(id_col), on=id_col)
+
+    return _ingest_stream(
+        stream_df, corpus_path, checkpoint_path, query_name, trigger,
+        index_compact_every, seed_df, seed_cells,
+        dedup_batch=dedup_batch,
+        build_index=lambda df: semantic_cell_index(df, centroids, **vec_kw),
+        dedup_against=dedup_against,
+        partition_col="cell",
     )
 
 
@@ -544,114 +431,41 @@ def cdc_ingest_stream(
     trigger: dict | None = None,
     index_compact_every: int | None = 16,
 ):
-    """Streaming CHUNK-LEVEL corpus ingest — `dedup_ingest_stream`'s
-    contract carried to content-defined chunks (the third dedup tier to
-    get the micro-batch + persisted-index treatment, after MinHash and
-    SemDeDup): append every micro-batch's CDC survivors to
-    `corpus_path/batch_id=N`. This is the gate for partially-re-hosted
+    """Streaming CHUNK-LEVEL corpus ingest: append every micro-batch's
+    CDC survivors to `corpus_path/batch_id=N` (the module docstring gives
+    the per-batch protocol). This is the gate for partially-re-hosted
     content in a continuous crawl — a page embedding a long verbatim run
     of an already-accepted page inside fresh text passes whole-document
     MinHash but fails the shift-resistant foreign-chars threshold.
+    Intra-batch: `cdc_dedup_documents` (min-id chunk ownership); against
+    the corpus: `cdc_dedup_incremental`, where the base always owns
+    shared content (arrival order); index: the survivors' distinct chunk
+    hashes (`cdc_chunk_hash_index`, 8 bytes per distinct chunk).
 
-    Per micro-batch (inside foreachBatch, plain batch operators):
-      1. intra-batch `cdc_dedup_documents` (min-id chunk ownership —
-         deterministic, so a replayed batch reproduces its survivors);
-      2. `cdc_dedup_incremental` of the remainder against the
-         accumulated chunk-hash index = `seed_chunk_hashes` ∪ all
-         batch_id < N persisted `_index` relations (strictly smaller
-         ids — a replayed batch never sees its own earlier partial
-         write); the base always owns shared content (arrival order);
-      3. overwrite `corpus_path/batch_id=N` with the surviving rows,
-         then `corpus_path/batch_id=N/_index` with THEIR distinct
-         chunk hashes (`cdc_chunk_hash_index` — 8 bytes per distinct
-         chunk, underscore-hidden like the other tiers' indexes).
-
-    Scale shape: the accumulated corpus is never re-chunked — each
-    batch pays its own chunking plus a membership join against 8-byte
-    index rows, so per-batch cost scales with the batch, not the
-    corpus. `index_compact_every` rolls accreted per-batch `_index`
-    dirs into one `_index_ckpt_N` exactly as in `dedup_ingest_stream`
-    (same `_maybe_compact_index` machinery — duplicate hashes across
+    Scale shape: each batch pays its own chunking plus a membership join
+    against 8-byte index rows and never reads the prior batches' text
+    (except to re-index a pre-index layout). Duplicate hashes across
     concatenated files are harmless membership rows, so compaction is
-    plain file consolidation); a corpus written without indexes falls
-    back losslessly to re-chunking the accumulated text. Sink
-    idempotence is layout-based (a replayed batch overwrites its own
-    directory, index included) — the `write_stream_partitioned`
-    contract shared by all three ingest tiers. Chunking parameters are
-    part of the index identity: change them → rebuild the indexes."""
+    plain file consolidation. `seed_chunk_hashes` is the seed's persisted
+    index; it is used with or without `seed_df`."""
     from pandasvcf_spark.operators.dedup import (
         cdc_chunk_hash_index,
         cdc_dedup_documents,
         cdc_dedup_incremental,
     )
 
-    spark = stream_df.sparkSession
-    kw = dict(min_len=min_len, avg_len=avg_len, max_len=max_len)
-    seed_keys = seed_chunk_hashes
-    if seed_df is not None and seed_keys is None:
-        # chunk the seed ONCE per stream start, not once per micro-batch
-        seed_keys = cdc_chunk_hash_index(
-            seed_df, text_col=text_col, id_col=id_col, **kw
-        ).localCheckpoint(eager=True)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_clean = cdc_dedup_documents(
-            batch_df, max_foreign_frac=max_foreign_frac,
-            text_col=text_col, id_col=id_col, **kw,
-        )
-        base_keys = []
-        if seed_keys is not None:
-            base_keys.append(seed_keys)
-        prior_dirs = _list_prior_batch_dirs(spark, corpus_path, batch_id)
-        if prior_dirs:
-            _maybe_compact_index(
-                spark, corpus_path, prior_dirs, index_compact_every
-            )
-            idx_dirs = _prior_index_dirs(spark, corpus_path, prior_dirs)
-            if idx_dirs:
-                base_keys.append(spark.read.parquet(*idx_dirs))
-            else:
-                # legacy layout (some prior batch lacks _index/_SUCCESS):
-                # lossless fallback — re-chunk the accumulated text
-                base_keys.append(
-                    cdc_chunk_hash_index(
-                        spark.read.parquet(*prior_dirs),
-                        text_col=text_col, id_col=id_col, **kw,
-                    )
-                )
-        if base_keys:
-            keys = base_keys[0]
-            for extra in base_keys[1:]:
-                keys = keys.unionByName(extra, allowMissingColumns=False)
-            survivors = cdc_dedup_incremental(
-                keys,
-                batch_clean,
-                max_foreign_frac=max_foreign_frac,
-                text_col=text_col,
-                id_col=id_col,
-                **kw,
-            )
-        else:
-            survivors = batch_clean
-        # survivors feed both the sink and the index — pin the row set
-        survivors = survivors.localCheckpoint(eager=True)
-        survivors.write.mode("overwrite").parquet(
-            f"{corpus_path}/batch_id={batch_id}"
-        )
-        # index AFTER the survivor overwrite (which clears the batch
-        # directory, _index included) so a replay rebuilds both
-        cdc_chunk_hash_index(
-            survivors, text_col=text_col, id_col=id_col, **kw
-        ).write.mode("overwrite").parquet(
-            f"{corpus_path}/batch_id={batch_id}/{INDEX_DIR}"
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    kw = dict(
+        text_col=text_col, id_col=id_col, min_len=min_len, avg_len=avg_len,
+        max_len=max_len,
+    )
+    return _ingest_stream(
+        stream_df, corpus_path, checkpoint_path, query_name, trigger,
+        index_compact_every, seed_df, seed_chunk_hashes,
+        dedup_batch=lambda batch_df: cdc_dedup_documents(
+            batch_df, max_foreign_frac=max_foreign_frac, **kw
+        ),
+        build_index=lambda df: cdc_chunk_hash_index(df, **kw),
+        dedup_against=lambda clean, hashes, _base_text: cdc_dedup_incremental(
+            hashes, clean, max_foreign_frac=max_foreign_frac, **kw
+        ),
     )

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pandasvcf_spark.streaming.events import _batch_dir_sink
+
 
 def sketch_ingest_stream(
     stream_df: DataFrame,
@@ -41,20 +43,11 @@ def sketch_ingest_stream(
     part of the sketch's identity, store them alongside."""
     from pandasvcf_spark.operators.sketches import countmin_sketch
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        k = key() if callable(key) else key
-        countmin_sketch(batch_df, k, depth=depth, width=width).write.mode(
-            "overwrite"
-        ).parquet(f"{sketch_path}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _batch_dir_sink(
+        stream_df, sketch_path, checkpoint_path, query_name, trigger,
+        lambda batch_df, _batch_id: countmin_sketch(
+            batch_df, key() if callable(key) else key, depth=depth, width=width
+        ),
     )
 
 
@@ -90,20 +83,11 @@ def hll_ingest_stream(
     the property cell-wise-SUM sketches cannot offer)."""
     from pandasvcf_spark.operators.sketches import hll_sketch
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        k = key() if callable(key) else key
-        hll_sketch(batch_df, k, m=m).write.mode("overwrite").parquet(
-            f"{sketch_path}/batch_id={batch_id}"
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _batch_dir_sink(
+        stream_df, sketch_path, checkpoint_path, query_name, trigger,
+        lambda batch_df, _batch_id: hll_sketch(
+            batch_df, key() if callable(key) else key, m=m
+        ),
     )
 
 
@@ -141,24 +125,17 @@ def drift_ingest_stream(
     `cat` is a column name or a zero-arg callable returning the
     Column (the sketch_ingest_stream convention)."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def cells_of(batch_df: DataFrame, _batch_id: int) -> DataFrame:
         c = cat() if callable(cat) else F.col(cat)
-        (
+        return (
             batch_df.filter(c.isNotNull())
             .groupBy(c.alias("cat"))
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{cells_path}/batch_id={batch_id}")
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _batch_dir_sink(
+        stream_df, cells_path, checkpoint_path, query_name, trigger,
+        cells_of,
     )
 
 
@@ -208,20 +185,11 @@ def ams_ingest_stream(
     whole stream so far, without ever re-reading history."""
     from pandasvcf_spark.operators.sketches import ams_f2_sketch
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        k = key() if callable(key) else key
-        ams_f2_sketch(batch_df, k, rows=rows).write.mode(
-            "overwrite"
-        ).parquet(f"{sketch_path}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return _batch_dir_sink(
+        stream_df, sketch_path, checkpoint_path, query_name, trigger,
+        lambda batch_df, _batch_id: ams_f2_sketch(
+            batch_df, key() if callable(key) else key, rows=rows
+        ),
     )
 
 

@@ -242,3 +242,119 @@ def test_incremental_guards_and_passthrough(spark):
         for r in cdc_dedup_incremental(idx, d, max_foreign_frac=0.4).collect()
     )
     assert got == [5, 6, 7]
+
+
+def test_cdc_index_checkpoint_compaction(spark, tmp_path):
+    """With index_compact_every=2, five micro-batches roll their
+    per-batch `_index` dirs into ONE committed `_index_ckpt_N`; a later
+    batch gates a re-host of an EARLY batch's survivor THROUGH the
+    checkpoint; survivors equal a compaction-off run; the crash-replay
+    drill stays idempotent; and an uncommitted checkpoint dir is
+    invisible to readers and swept by the next roll-up."""
+    from pandasvcf_spark.streaming.ingest import (
+        INDEX_DIR,
+        _latest_index_ckpt,
+        _list_prior_batch_dirs,
+        _prior_index_dirs,
+    )
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    now = time.time()
+    docs = {k: [(10 * k + 11, rand_text(40 + k, 700))] for k in range(4)}
+    # batch 4: a re-host of batch 0's survivor — gated VIA the ckpt —
+    # plus a fresh doc
+    docs[4] = [(51, rand_text(35, 100) + " " + docs[0][0][1][:600]),
+               (52, FRESH_B)]
+    for k, rows in docs.items():
+        _write_batch_file(str(in_dir), f"b{k}.jsonl", rows, now - 60 + k)
+
+    corpus = tmp_path / "corpus"
+    ckpt = tmp_path / "ckpt"
+    stale = corpus / "_index_ckpt_1"
+    stale.mkdir(parents=True)
+    (stale / "junk").write_text("not parquet")
+    _drain(spark, str(in_dir), corpus, ckpt, seed=None,
+           index_compact_every=2)
+    ids = sorted(r.doc_id for r in spark.read.parquet(str(corpus)).collect())
+    assert ids == [11, 21, 31, 41, 52], ids  # 51 gated via the ckpt
+
+    got_ckpt = _latest_index_ckpt(spark, str(corpus))
+    assert got_ckpt is not None
+    ck_path, upto = got_ckpt
+    assert upto >= 2 and (corpus / f"_index_ckpt_{upto}" / "_SUCCESS").exists()
+    assert not stale.exists(), "uncommitted debris not swept"
+
+    # read set = [ckpt] + only the per-batch indexes since it
+    prior = _list_prior_batch_dirs(spark, str(corpus), 5)
+    read_set = _prior_index_dirs(spark, str(corpus), prior)
+    assert read_set[0] == ck_path
+    assert all(p.endswith(INDEX_DIR) for p in read_set[1:])
+    assert len(read_set) == 1 + (4 - upto)
+    # the roll-up holds exactly the union of the covered batch indexes
+    covered = [
+        str(corpus / f"batch_id={k}" / INDEX_DIR) for k in range(upto + 1)
+    ]
+    want = {r.chunk_hash for r in spark.read.parquet(*covered).collect()}
+    got = {r.chunk_hash for r in spark.read.parquet(ck_path).collect()}
+    assert got == want
+
+    # compaction-off twin: identical survivors
+    corpus2 = tmp_path / "corpus_off"
+    _drain(spark, str(in_dir), corpus2, tmp_path / "ckpt_off", seed=None,
+           index_compact_every=None)
+    ids2 = sorted(
+        r.doc_id for r in spark.read.parquet(str(corpus2)).collect()
+    )
+    assert ids2 == ids
+    assert _latest_index_ckpt(spark, str(corpus2)) is None
+
+    # crash-replay drill with compaction on: corpus unchanged
+    commits = sorted(
+        (p for p in (ckpt / "commits").iterdir() if p.name.isdigit()),
+        key=lambda p: int(p.name),
+    )
+    last = commits[-1]
+    last.unlink()
+    crc = last.parent / f".{last.name}.crc"
+    if crc.exists():
+        crc.unlink()
+    _drain(spark, str(in_dir), corpus, ckpt, seed=None,
+           index_compact_every=2)
+    after = sorted(
+        r.doc_id for r in spark.read.parquet(str(corpus)).collect()
+    )
+    assert after == ids, "replayed batch changed the corpus"
+
+
+def test_cdc_seed_chunk_hashes_route_matches_seed_df(spark, tmp_path):
+    """A precomputed seed index (`seed_chunk_hashes`, no `seed_df`)
+    gives the survivors of the chunk-at-stream-start route."""
+    from pandasvcf_spark.operators.dedup import cdc_chunk_hash_index
+
+    seed = spark.createDataFrame(
+        [(1, SEED_DOC)], "doc_id long, text string"
+    )
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    now = time.time()
+    _write_batch_file(
+        str(in_dir), "b0.jsonl", [(11, FRESH_A), (12, REHOST_SEED)],
+        now - 20,
+    )
+    _write_batch_file(
+        str(in_dir), "b1.jsonl", [(21, REHOST_A), (22, FRESH_B)], now - 10
+    )
+    routes = {
+        "df": {"seed": seed},
+        "hashes": {"seed": None,
+                   "seed_chunk_hashes": cdc_chunk_hash_index(seed)},
+    }
+    got = {}
+    for name, kw in routes.items():
+        corpus = tmp_path / f"corpus_{name}"
+        _drain(spark, str(in_dir), corpus, tmp_path / f"ckpt_{name}", **kw)
+        got[name] = sorted(
+            r.doc_id for r in spark.read.parquet(str(corpus)).collect()
+        )
+    assert got["hashes"] == got["df"] == [11, 22], got

@@ -10,6 +10,7 @@ import json
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 DOC = (
@@ -337,3 +338,62 @@ def test_round15_index_checkpoint_compaction(spark, tmp_path):
         r.doc_id for r in spark.read.parquet(str(corpus)).collect()
     )
     assert after == ids, "replayed batch changed the corpus"
+
+
+def _seed_and_batches(spark, in_dir):
+    seed = spark.createDataFrame(
+        [(1, DOC), (2, OTHER)], "doc_id long, text string"
+    ).select(
+        "doc_id",
+        "text",
+        F.lit("en").alias("lang"),
+        F.lit("seed").alias("source"),
+        F.length("text").cast("long").alias("n_chars"),
+    )
+    now = time.time()
+    _write_batch_file(
+        str(in_dir), "b0.jsonl", [(101, DOC + " "), (102, FRESH)], now - 20
+    )
+    _write_batch_file(
+        str(in_dir), "b1.jsonl", [(201, OTHER + " "), (202, FRESH + " ")],
+        now - 10,
+    )
+    return seed
+
+
+def test_seed_band_keys_route_matches_seed_df(spark, tmp_path):
+    """A precomputed seed index (`seed_band_keys`, passed beside the
+    seed texts the verification reads) gives the survivors of the
+    index-at-stream-start route."""
+    from pandasvcf_spark.functions.text import word_ngrams_expr
+    from pandasvcf_spark.operators.dedup import minhash_band_keys
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    seed = _seed_and_batches(spark, in_dir)
+    keys = minhash_band_keys(seed, "doc_id", word_ngrams_expr("text", 3))
+    routes = {}
+    for name, kw in (("df", {}), ("keys", {"seed_band_keys": keys})):
+        corpus = tmp_path / f"corpus_{name}"
+        _drain(spark, str(in_dir), corpus, tmp_path / f"ckpt_{name}", seed,
+               **kw)
+        routes[name] = sorted(
+            r.doc_id for r in spark.read.parquet(str(corpus)).collect()
+        )
+    # 101 and 201 dup seed docs; 202 dups batch 0's survivor 102
+    assert routes["keys"] == routes["df"] == [102], routes
+
+
+def test_seed_band_keys_without_seed_df_raises(spark, tmp_path):
+    """Jaccard verification reads the seed texts, so a seed index passed
+    without `seed_df` is refused instead of silently ignored."""
+    from pandasvcf_spark.functions.text import word_ngrams_expr
+    from pandasvcf_spark.operators.dedup import minhash_band_keys
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    seed = _seed_and_batches(spark, in_dir)
+    keys = minhash_band_keys(seed, "doc_id", word_ngrams_expr("text", 3))
+    with pytest.raises(ValueError, match="seed_df"):
+        _drain(spark, str(in_dir), tmp_path / "corpus", tmp_path / "ckpt",
+               None, seed_band_keys=keys)

@@ -282,3 +282,41 @@ def test_round15_semantic_index_checkpoint_compaction(spark, tmp_path):
         for r in spark.read.parquet(str(corpus2)).select("vec_id").collect()
     )
     assert ids2 == ids
+
+
+
+_SEED_CENTS = [_DIRS[g].tolist() for g in range(4)]
+
+
+def test_seed_cells_route_matches_seed_df(spark, tmp_path):
+    """A precomputed seed index (`seed_cells`) gives the survivors of
+    the assign-at-stream-start route, with or without `seed_df`: the
+    incremental operator reads only the index, so `seed_cells` alone
+    must dedup against the seed too. Batch: 101 repeats seed vector 1,
+    102 is fresh."""
+    from pandasvcf_spark.operators.dedup import semantic_cell_index
+
+    seed = spark.createDataFrame(
+        [(1, _vec(0)), (2, _vec(1))], "vec_id long, embedding array<float>"
+    )
+    cells = semantic_cell_index(seed, _SEED_CENTS)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    _write_parquet_batch(
+        spark, str(in_dir), "b0", [(101, _vec(0)), (102, _vec(2))],
+        time.time() - 20,
+    )
+    routes = {
+        "df": (seed, None),
+        "cells": (seed, cells),
+        "cells_only": (None, cells),
+    }
+    got = {}
+    for name, (seed_df, seed_cells) in routes.items():
+        corpus = tmp_path / f"corpus_{name}"
+        _drain(spark, str(in_dir), corpus, tmp_path / f"ckpt_{name}",
+               seed_df, _SEED_CENTS, seed_cells=seed_cells)
+        got[name] = sorted(
+            r.vec_id for r in spark.read.parquet(str(corpus)).collect()
+        )
+    assert got["cells"] == got["cells_only"] == got["df"] == [102], got
