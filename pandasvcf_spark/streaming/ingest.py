@@ -59,6 +59,7 @@ from functools import reduce
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from pandasvcf_spark.streaming.events import _batch_dir_sink
 
@@ -162,7 +163,8 @@ def _maybe_compact_index(
     prior_dirs: list[str],
     idx_dirs: list[str] | None,
     every: int | None,
-    partition_by: list | None = None,
+    partition_by: list | None,
+    schema: StructType,
 ) -> list[str] | None:
     """Roll the per-batch `_index` dirs of the read set `idx_dirs`
     (`_prior_index_dirs` of the `batch_id`-sorted `prior_dirs`) into ONE
@@ -172,7 +174,8 @@ def _maybe_compact_index(
     `idx_dirs` unchanged. The roll-up is `compact_parquet` over the read
     set itself, i.e. the previous roll-up plus the new dirs, never the
     whole history (amortized-flat maintenance); `partition_by` keeps a
-    partitioned index layout.
+    partitioned index layout, and every root is read with the index
+    `schema`.
 
     Replay/crash safety: only STRICTLY PRIOR batches are ever rolled up,
     so a replayed batch never reads its own earlier output through the
@@ -191,9 +194,11 @@ def _maybe_compact_index(
     fs, jvm = _fs_of(spark, corpus_path)
     if _exists(spark, out):
         fs.delete(jvm.org.apache.hadoop.fs.Path(out), True)
-    from pandasvcf_spark.plans.bucketing import compact_parquet
+    from pandasvcf_spark.plans.bucketing import _compact_parquet
 
-    compact_parquet(spark, idx_dirs, out, partition_by=partition_by)
+    _compact_parquet(
+        spark, idx_dirs, out, partition_by=partition_by, schema=schema
+    )
     for n, p in _list_dirs(spark, corpus_path, INDEX_CKPT_PREFIX):
         if n < new_upto:
             try:  # superseded or uncommitted debris — best-effort cleanup
@@ -240,13 +245,19 @@ def _ingest_stream(
         texts = [] if seed_df is None else [seed_df]
         prior_dirs = _list_prior_batch_dirs(spark, corpus_path, batch_id)
         if prior_dirs:
+            # Every index root is read with the index schema, known from
+            # analysis alone: no footer-inference job per root, and a
+            # partitioned index of zero rows, which has no data file to
+            # infer from, reads as zero rows.
+            schema = build_index(batch_clean).schema
             idx_dirs = _maybe_compact_index(
                 spark, corpus_path, prior_dirs,
                 _prior_index_dirs(spark, corpus_path, prior_dirs),
-                index_compact_every, partition_by,
+                index_compact_every, partition_by, schema,
             )
             if reads_base_text or idx_dirs is None:
                 texts.append(spark.read.parquet(*prior_dirs))
+            read = spark.read.schema(schema)
             if idx_dirs is None:
                 indexes.append(build_index(texts[-1]))  # legacy layout
             elif partition_col:
@@ -256,9 +267,9 @@ def _ingest_stream(
                 # layouts, and a single multi-path read trips Spark's
                 # CONFLICTING_DIRECTORY_STRUCTURES partition discovery.
                 # Partition pruning still pushes into each relation.
-                indexes += [spark.read.parquet(d) for d in idx_dirs]
+                indexes += [read.parquet(d) for d in idx_dirs]
             else:
-                indexes.append(spark.read.parquet(*idx_dirs))
+                indexes.append(read.parquet(*idx_dirs))
         if not indexes:
             return batch_clean
         return dedup_against(

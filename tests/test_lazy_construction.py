@@ -212,3 +212,102 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
         compact_parquet(spark, src, out)
     with _pytest.raises(ValueError, match="target_mb"):
         compact_parquet(spark, src, str(tmp_path / "x"), target_mb=0)
+
+
+def test_compact_parquet_tolerates_empty_first_root(spark, tmp_path):
+    """A partitioned write of zero rows leaves a root with no data file;
+    as the first input root it must read as zero rows, not fail schema
+    inference."""
+    from pandasvcf_spark.plans.bucketing import compact_parquet
+
+    d = spark.range(20).select("id", (F.col("id") % 3).alias("k"))
+    empty, full = str(tmp_path / "empty"), str(tmp_path / "full")
+    d.limit(0).write.partitionBy("k").parquet(empty)
+    d.write.partitionBy("k").parquet(full)
+    out = str(tmp_path / "out")
+    compact_parquet(spark, [empty, full], out, partition_by=["k"])
+    got = spark.read.parquet(out).select("id", "k").collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, d.collect()))
+
+
+_HEADLINE = [
+    "flagship_annotate", "e_sessionize", "t_quality_score",
+    "agg_tpch_q1", "j_multiway_q5", "v_cosine_topk",
+]
+
+
+def test_warm_catalog_construction_runs_no_jobs(spark):
+    """`queries.tables.load` remembers each table's inferred schema per
+    session, so building a query a second time, or registering the views
+    again, reads no parquet footer: no Spark job at all."""
+    import os
+
+    import pandasvcf_spark.queries  # noqa: F401 (registers the catalog)
+    from conftest import SF_DIR
+    from pandasvcf_spark.queries.registry import QUERIES
+    from pandasvcf_spark.queries.tables import register_views
+
+    if not os.path.isdir(SF_DIR):
+        pytest.skip(f"testdata {SF_DIR} not present")
+    for name in _HEADLINE:
+        QUERIES[name].fn(spark, SF_DIR)
+    register_views(spark, SF_DIR, "_warm")
+    before = _job_ids(spark)
+    for name in _HEADLINE:
+        QUERIES[name].fn(spark, SF_DIR)
+    assert _job_ids(spark) == before, "warm catalog construction ran jobs"
+    register_views(spark, SF_DIR, "_warm")
+    assert _job_ids(spark) == before, "warm register_views ran jobs"
+
+
+def test_table_schema_memo_never_serves_a_stale_schema(spark, tmp_path):
+    """A table file rewritten in place is read with its new schema and
+    rows; `events.parquet` normalizes `ts` to TIMESTAMP with the same
+    instants whether the file stores TIMESTAMP(NANOS) or microsecond NTZ,
+    on a first load and on a memo-served one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pandasvcf_spark.queries.tables import load
+
+    sf = str(tmp_path)
+    path = f"{sf}/orders.parquet"
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int32())}), path)
+    for _ in range(2):
+        df = load(spark, sf, "orders")
+        assert df.dtypes == [("k", "int")]
+        assert sorted(r.k for r in df.collect()) == [1, 2]
+    before = _job_ids(spark)
+    load(spark, sf, "orders")
+    assert _job_ids(spark) == before, "a warm load inferred the schema again"
+
+    # in place: same path and inode, an added column and a changed type
+    pq.write_table(
+        pa.table({"k": pa.array(["a", "b", "c"]),
+                  "x": pa.array([0.5, 1.5, 2.5])}),
+        path,
+    )
+    df = load(spark, sf, "orders")
+    assert df.dtypes == [("k", "string"), ("x", "double")]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("a", 0.5), ("b", 1.5), ("c", 2.5)
+    ]
+
+    ns = [1_700_000_000_123_456_789, 1_700_003_600_000_001_000]
+    us = [v // 1000 for v in ns]
+    events = f"{sf}/events.parquet"
+    stored = {
+        "nanos": pa.array(ns, pa.timestamp("ns")),
+        "micros_ntz": pa.array(us, pa.timestamp("us")),
+    }
+    for kind, ts in stored.items():
+        pq.write_table(
+            pa.table({"user_id": pa.array([1, 2], pa.int64()), "ts": ts}),
+            events, version="2.6", coerce_timestamps=None,
+        )
+        for _ in range(2):
+            df = load(spark, sf, "events")
+            assert dict(df.dtypes)["ts"] == "timestamp", kind
+            got = [r.u for r in df.select(F.unix_micros("ts").alias("u"))
+                   .orderBy("u").collect()]
+            assert got == us, kind

@@ -320,3 +320,43 @@ def test_seed_cells_route_matches_seed_df(spark, tmp_path):
             r.vec_id for r in spark.read.parquet(str(corpus)).collect()
         )
     assert got["cells"] == got["cells_only"] == got["df"] == [102], got
+
+
+def test_all_duplicate_batch_does_not_stop_the_stream(spark, tmp_path):
+    """A batch whose survivors are all duplicates writes a `cell`-
+    partitioned `_index` with no data files. Later batches read that root
+    as zero index rows: neither the next batch's index read nor a roll-up
+    that starts with that root may fail schema inference
+    (UNABLE_TO_INFER_SCHEMA), which would stop the stream."""
+    from pandasvcf_spark.streaming.ingest import _latest_index_ckpt
+
+    def run(name, batches, seed_rows=None, **kw):
+        in_dir = tmp_path / f"in_{name}"
+        in_dir.mkdir()
+        now = time.time()
+        for k, rows in enumerate(batches):
+            _write_parquet_batch(
+                spark, str(in_dir), f"b{k}", rows, now - 60 + k
+            )
+        seed = None if seed_rows is None else spark.createDataFrame(
+            seed_rows, "vec_id long, embedding array<float>"
+        )
+        corpus = tmp_path / f"corpus_{name}"
+        _drain(spark, str(in_dir), corpus, tmp_path / f"ckpt_{name}",
+               seed, _SEED_CENTS, **kw)
+        ids = sorted(
+            r.vec_id for r in spark.read.parquet(str(corpus)).collect()
+        )
+        return ids, corpus
+
+    # 11 repeats batch 0's 10: batch 1 has no survivors
+    ids, _ = run("next_batch", [[(10, _vec(0))], [(11, _vec(0))],
+                                [(12, _vec(1))]])
+    assert ids == [10, 12], ids
+    # 21 repeats the seed, so the first root of batch 2's roll-up is empty
+    ids, corpus = run(
+        "rollup", [[(21, _vec(2))], [(22, _vec(3))], [(23, _vec(0))]],
+        seed_rows=[(1, _vec(2))], index_compact_every=1,
+    )
+    assert ids == [22, 23], ids
+    assert _latest_index_ckpt(spark, str(corpus)) is not None
