@@ -27,10 +27,14 @@ Scale notes:
   * The driver index is O(n_blocks) seeks (~18 B each). A 100 GiB BGZF at
     64 KiB/block is ~1.6M seeks — seconds against a local filesystem.
     The index is offsets-only (8 B/block) — no pickling of data.
-  * Chunk size targets bytes, not blocks, so task count tracks input size;
-    `target_chunk_bytes=None` auto-sizes to ~2 chunks/core with a 4 MiB
-    floor so small files still fan out and big files stay at sane task
-    counts (AQE coalesces downstream anyway).
+  * The default plan cuts block-aligned ranges of equal block count, at
+    most one per core (`target_chunk_bytes=None`; floor 4 blocks, cap
+    4,096 blocks, see `read_bgzf_lines`): every Python-worker task pays
+    a fixed set-up charge (~80 ms measured at 4 cores), so a second wave
+    of tasks costs more than the balance it could buy. An explicit
+    `target_chunk_bytes` cuts by compressed bytes instead.
+  * Each range inflates with one `zlib.decompress` per block, sized by the
+    block's own BC header (`_inflate_range`), so a task costs O(range).
   * Decompression is zlib (C speed) inside Arrow-batched mapInArrow —
     32 cores decompress ~32x faster than the one JVM task the non-split
     path gets. Python is the right side for this: the work is pure C calls
@@ -168,6 +172,33 @@ def _read_one_block(fh) -> bytes | None:
     return zlib.decompress(comp, wbits=31)
 
 
+def _inflate_range(data: bytes) -> bytes:
+    """Inflate a run of whole BGZF blocks: one `zlib.decompress` per block,
+    over a memoryview slice sized by the block's BC header, so the cost is
+    linear in the run (peeling members off a `decompressobj`'s
+    `unused_data` copies the rest of the run at each step: quadratic).
+    zlib still checks every member's CRC32 and ISIZE (`zlib.error`).
+    Raises ValueError when a position holds no BGZF header or a block
+    runs past the end of `data`."""
+    import zlib
+
+    view = memoryview(data)
+    parts = []
+    pos = 0
+    while pos < len(view):
+        size = _block_size(bytes(view[pos : pos + 64]))
+        if size is None:
+            raise ValueError(f"no BGZF block header at range offset {pos}")
+        if pos + size > len(view):
+            raise ValueError(
+                f"BGZF block at range offset {pos} ({size} bytes) overruns "
+                f"the range end ({len(view)} bytes)"
+            )
+        parts.append(zlib.decompress(view[pos : pos + size], wbits=31))
+        pos += size
+    return b"".join(parts)
+
+
 def _lines_batch(text: bytes):
     """One Arrow batch of (value STRING) lines from a decompressed slice
     whose trailing newline the caller has already stripped. CRLF is
@@ -261,11 +292,15 @@ def read_bgzf_lines(
         # (decompress, parse, explode) scales with RAW size, and BGZF
         # blocks cap at 64 KiB raw regardless of how well the data
         # compresses (VCF text compresses ~80x, so compressed-byte chunks
-        # wildly under-split small-but-dense files). ~2 chunks per core;
-        # floor 4 blocks (~256 KiB raw) amortizes task overhead; cap 4096
-        # blocks (~256 MiB raw) bounds a worker's text + Arrow copy.
+        # wildly under-split small-but-dense files). At most one range per
+        # core: each Python-worker task pays a fixed ~80 ms before its
+        # first row (measured at 4 cores; nearly all of it PySpark's
+        # per-task `setup_spark_files` -> `importlib.invalidate_caches`),
+        # and equal-block ranges gain no balance from a second wave.
+        # Floor 4 blocks (~256 KiB raw) keeps tiny files to one task; cap
+        # 4096 blocks (~256 MiB raw) bounds a worker's text + Arrow copy.
         par = spark.sparkContext.defaultParallelism
-        bpc = max(4, min(4096, len(offsets) // max(1, par * 2) or 1))
+        bpc = max(4, min(4096, -(-len(offsets) // max(1, par))))
         ranges = [
             (
                 offsets[i],
@@ -275,24 +310,14 @@ def read_bgzf_lines(
         ]
 
     def scan(batches):
-        import zlib as _z
-
         for batch in batches:
             for rid in batch.column("id").to_pylist():
                 start, end = ranges[rid]
                 first = rid == 0
                 with open(path, "rb") as fh:
                     fh.seek(start)
-                    # A range is whole gzip members by construction; inflate
-                    # them member-by-member (decompressobj exposes
-                    # unused_data for the member boundary).
-                    comp = fh.read(end - start)
-                    parts = []
-                    while comp:
-                        d = _z.decompressobj(wbits=31)
-                        parts.append(d.decompress(comp))
-                        comp = d.unused_data
-                    text = b"".join(parts)
+                    # A range is whole BGZF blocks by construction.
+                    text = _inflate_range(fh.read(end - start))
                     # Drop the first line of OUR OWN bytes — before any
                     # forward read, so a newline-free chunk (interior of
                     # one long line) emits nothing instead of stealing the

@@ -286,33 +286,19 @@ def read_vcf(
         f.endswith(".gz") and os.path.exists(f + ".tbi") and is_bgzf(f)
         for f in files
     )
-    # auto-threshold, MEASURED (round 6, local[32], 1000G x56 re-blocked
-    # fixture, 62.8 MB compressed / ~5.5 GB raw, min-of-2; re-recorded
-    # every round by bench.py's BGZF stage): end-to-end read_vcf+parse is
-    # 48.6 s (splittable) vs 43.7 s (JVM text + repartition) — break-even
-    # within the bench's ~30% ambient swing. Round-9 re-adjudication of
-    # the round-8 1.27x scan-only regression (three paired A/B sessions,
-    # min-of-3 each, same fixture, same hour): split/single = 9.7/7.6
-    # (1.28), 4.9/7.8 (0.63, warm Python workers), 12.8/8.6 (1.49, at
-    # 1-minute loadavg ~11 on the shared 32-core box). The ratio TRACKS
-    # AMBIENT LOAD and worker-pool warmth, not plan shape: the split
-    # scan wants 32 idle cores + a spawned worker pool, the single-task
-    # scan wants one core, so under co-tenant load the split path
-    # starves first. At true idle + warm workers the split path WINS
-    # (0.63) — there is no local regression to tune away, and 64 MiB
-    # stands (bench.py now records loadavg_1m beside the BGZF numbers
-    # so future rounds can read the confounder directly). The JVM
-    # route's remaining local edge is that its "shuffle" is memory-speed
-    # inside one JVM while the splittable path pays Arrow transfer of
-    # the raw text. The split path's win is CLUSTER-shape, growing with
-    # size:
-    # the JVM route is one task decompressing the whole file (a 100 GB
-    # .gz is ~8.7 TB raw through one core) plus a full raw-text exchange
-    # (network on a real cluster; local spill once raw > memory), while
-    # the BGZF route is embarrassingly parallel with no exchange. 64 MiB
-    # is the measured local break-even and the smallest size where the
-    # cluster-shape argument dominates; below it the one-task decompress
-    # is sub-second and not worth the split path's fixed overhead.
+    # auto-threshold. Measured with per-block inflate and one range per
+    # core (local[4], 4-core host; rich-shaped inputs from perfbench's
+    # generator; read_vcf -> noop write, warm session, median of 3-5,
+    # split vs JVM text): 1.7 MB BGZF 0.32 vs 0.23 s, 6.8 MB 0.37 vs
+    # 0.38 s, 27 MB 0.86 vs 1.19 s, 108 MB 2.90 vs 4.31 s. The split path
+    # breaks even near 7 MB; below that the fixed per-Python-task charge
+    # (~80 ms a wave) outweighs a sub-second one-task decompress. The
+    # split path's edge grows with size and cluster width: the JVM route
+    # is one task decompressing the whole file plus a full raw-text
+    # exchange, the BGZF route is parallel with no exchange. 64 MiB is
+    # kept for now, which leaves every input under a few MB (where the
+    # split path loses) on the JVM-text route; lowering it toward the
+    # break-even is open.
     use_bgzf = not use_tabix and (
         bgzf is True
         or (

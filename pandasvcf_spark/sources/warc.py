@@ -11,9 +11,10 @@ thousands of ~1 GB WARC files, so the right Spark unit is one task per
 file (the way real Common Crawl jobs shard), not byte-splitting inside
 one file: `read_warc_gz` distributes the path list and each task
 stream-walks its file's gzip members with `zlib.decompressobj`
-(`unused_data` marks the member boundary — the read_bgzf_lines device),
-parsing WARC headers as it goes. No driver-side indexing pass, no whole-
-file buffering: one record in memory at a time per task.
+(`unused_data` marks the member boundary: a WARC member, unlike a BGZF
+block, carries no compressed size to slice by), parsing WARC headers as
+it goes. No driver-side indexing pass, no whole-file buffering: one
+record in memory at a time per task.
 
 Record parsing implements the public spec shape: `WARC/1.x` version
 line, CRLF header block (`WARC-Type`, `WARC-Target-URI`, `WARC-Date`,
@@ -93,8 +94,9 @@ def iter_warc_records(data: bytes) -> Iterator[dict]:
 def _iter_gzip_members(path: str) -> Iterator[bytes]:
     """Stream-decompress concatenated gzip members one at a time —
     `decompressobj(wbits=31)` stops at each member's end and exposes
-    the remainder via `unused_data` (the read_bgzf_lines device), so
-    memory holds one member, never the file."""
+    the remainder via `unused_data` (a WARC member header carries no
+    compressed size to slice by), so memory holds one member, never the
+    file."""
     chunk_size = 1 << 20
     with open(path, "rb") as fh:
         buf = b""

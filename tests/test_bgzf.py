@@ -272,3 +272,57 @@ def test_virtual_ranges_exact_lines_one_range_per_task(spark, tmp_path):
     stale = [(vo(0), (offsets[3] + 1) << 16)]  # coffset inside block 3
     with pytest.raises(Exception, match="block boundary"):
         read_bgzf_virtual_ranges(spark, p, stale).collect()
+
+
+def test_default_plan_at_most_one_range_per_core(spark, tmp_path):
+    """The default plan cuts at most one block-aligned range per core
+    (every Python task pays a fixed set-up charge, so a second wave buys
+    nothing) and stays line-equal to spark.read.text; a file under the
+    4-block floor is one range."""
+    lines = [b"row%05d\tpayload" % i for i in range(4_000)]
+    data = b"\n".join(lines) + b"\n"
+    p = str(tmp_path / "many.bgzf.gz")
+    write_bgzf(p, data, block_raw_bytes=128)
+    assert len(bgzf_block_offsets(p)) >= 300
+    df = read_bgzf_lines(spark, p)
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert _line_digest(df) == _line_digest(spark.read.text(p))
+
+    small = str(tmp_path / "small.bgzf.gz")
+    write_bgzf(small, data[:200], block_raw_bytes=128)
+    assert len(bgzf_block_offsets(small)) < 4  # two data blocks + EOF
+    df = read_bgzf_lines(spark, small)
+    assert df.rdd.getNumPartitions() == 1
+    assert [r.value for r in df.collect()] == [
+        v.decode() for v in data[:200].split(b"\n")
+    ]
+
+
+def test_inflate_range_per_block(tmp_path):
+    """The range inflate walks the blocks by their BC sizes: it equals
+    gzip over 1,000+ blocks, refuses a range position without a BGZF
+    header or a block running past the range end (ValueError), and keeps
+    zlib's CRC32 check (zlib.error)."""
+    import zlib
+
+    from pandasvcf_spark.sources.bgzf import _inflate_range
+
+    data = b"".join(b"%06d\n" % i for i in range(12_000))
+    p = str(tmp_path / "blocks.bgzf.gz")
+    write_bgzf(p, data, block_raw_bytes=64)
+    offs = bgzf_block_offsets(p)
+    assert len(offs) > 1_000
+    raw = open(p, "rb").read()
+    assert _inflate_range(raw) == gzip.decompress(raw) == data
+
+    with pytest.raises(ValueError, match="no BGZF block header"):
+        _inflate_range(raw[: offs[5]] + b"not a gzip member at all")
+    with pytest.raises(ValueError, match="no BGZF block header"):
+        _inflate_range(raw[offs[3] + 1 : offs[9]])  # starts mid-block
+    with pytest.raises(ValueError, match="overruns"):
+        _inflate_range(raw[: offs[5] - 1])
+
+    bad = bytearray(raw)
+    bad[offs[2] - 8] ^= 0xFF  # first CRC32 byte of block 1
+    with pytest.raises(zlib.error):
+        _inflate_range(bytes(bad))
